@@ -350,7 +350,8 @@ class AnnIndex private (
       case (Some(c), Some(bc)) => Some(c.unionByName(bc))
       case _ => storedCodes
     }
-    val grown = copy(vectors = Mutations.add(vectors, batch), storedCodes = grownCodes)
+    val grown = copy(vectors = Mutations.add(vectors, AnnIndex.withMeta(batch)),
+      storedCodes = grownCodes)
     postings match {
       case Some(p) =>
         val delta0 = Spann.buildPostings(
@@ -472,13 +473,14 @@ object AnnIndex {
     spark.emptyDataset[Long].toDF("id")
   }
 
+  /** A vector table `(id, vec[, meta])` shaped to the index's `(id, vec, meta)`. */
+  private def withMeta(vectors: DataFrame): DataFrame =
+    if (vectors.columns.contains("meta")) vectors
+    else vectors.withColumn("meta", lit(null).cast("string"))
+
   /** Create over a vector table `(id, vec[, meta])`. */
-  def apply(spark: SparkSession, vectors: DataFrame, conf: GraftConf = GraftConf()): AnnIndex = {
-    val withMeta =
-      if (vectors.columns.contains("meta")) vectors
-      else vectors.withColumn("meta", lit(null).cast("string"))
-    new AnnIndex(spark, conf, withMeta, emptyDeletes(spark), None, None)
-  }
+  def apply(spark: SparkSession, vectors: DataFrame, conf: GraftConf = GraftConf()): AnnIndex =
+    new AnnIndex(spark, conf, withMeta(vectors), emptyDeletes(spark), None, None)
 
   /** LoadIndex: restore from an [[IndexStore]] directory. */
   def load(spark: SparkSession, dir: String): AnnIndex = {

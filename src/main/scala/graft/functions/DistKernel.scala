@@ -1,7 +1,7 @@
 package graft.functions
 
 /** Shared tight-loop distance kernels for the batch-search aggregates and
-  * expressions ([[BatchTopK]], [[NearestHeadsExpr]]).
+  * expressions ([[MultiTopK]], [[NearestHeadsExpr]]).
   *
   * Numeric contract (oracle exactness): accumulate in double, strictly
   * left-to-right per pair — identical results to [[VectorDistance]] and the
@@ -282,7 +282,7 @@ object DistKernel {
   }
 
   /** ONE corpus row against ALL flattened queries, each with its own bounded
-    * buffer ([[BatchTopK]] shape). `v.length >= dim` required; `vNorm` is
+    * buffer ([[MultiTopK]] shape). `v.length >= dim` required; `vNorm` is
     * v's full-length squared norm (cosine only).
     */
   def updateAll(v: Array[Double], flatQ: Array[Double], qNorms: Array[Double],

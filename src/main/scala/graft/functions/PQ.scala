@@ -134,20 +134,22 @@ object PQ {
     LutCodesDistExpr(lut, codes)
 
   def adcSearch(queries: DataFrame, quantized: DataFrame, cb: Codebooks, k: Int): DataFrame = {
-    // ONE-scan aggregate form (r16, [[LutBatchTopK]]): the crossJoin form
+    // ONE-scan aggregate form (r16, [[MultiTopK]]): the crossJoin form
     // materialized a joined row per (query, vector) pair (30 M at the sf0.1
     // scan) and paid a per-row group-hash; the per-query LUTs are the SAME
     // doubles ([[Codebooks.adcLut]], the code the former per-query UDF ran),
     // scored with the same left-to-right sum — results bit-identical.
-    val (qids, qvecs) = BatchTopK.collectQueries(queries)
-    val luts = qvecs.map(q =>
-      cb.adcLut(scala.collection.immutable.ArraySeq.unsafeWrapArray(q)))
-    graft.operators.Knn.explodeRanked(
-      quantized
-        .agg(LutBatchTopK.lutTopk(col("id"), col("codes"), qids, luts, k).as("per_q"))
-        .select(explode(col("per_q")).as("r"))
-        .select(col("r.query_id").as("query_id"), col("r.nn").as("nn")))
+    val q = MultiTopK.collectQueries(queries)
+    val luts = q.vecs.map(v =>
+      cb.adcLut(scala.collection.immutable.ArraySeq.unsafeWrapArray(v)))
+    lutSearch(quantized, q.ids, MultiTopK.Lut(luts), k, col("codes"))
   }
+
+  /** Every query's LUT through ONE [[MultiTopK]] scan of the quantized corpus. */
+  private def lutSearch(quantized: DataFrame, qids: Array[Long], lut: MultiTopK.Lut,
+      k: Int, codes: Column*): DataFrame =
+    graft.operators.Knn.explodeRanked(MultiTopK.search(quantized, qids, lut,
+      MultiTopK.AllQueries(k), col("id") +: codes: _*))
 
   /** SDC sub-tables (symmetric distance computation, the other half of Q11 —
     * `Common/PQQuantizer.h:110-128` precomputes 256×256 float tables per
@@ -203,20 +205,9 @@ object PQ {
     // reads the very same table cells the per-pair UDF read, in the same
     // order; results bit-identical.
     val tables = sdcTables(cb)
-    val qRows = quantizedQueries.select(col("query_id"), col("codes"))
-      .collect()
-      .map(r => (r.get(0).asInstanceOf[Number].longValue,
-        r.getSeq[Int](1).toArray))
-      .sortBy(_._1)
-    val qids = qRows.map(_._1)
-    val luts = qRows.map { case (_, qc) =>
-      Array.tabulate(cb.m)(s => tables(s)(qc(s)))
-    }
-    graft.operators.Knn.explodeRanked(
-      quantized
-        .agg(LutBatchTopK.lutTopk(col("id"), col("codes"), qids, luts, k).as("per_q"))
-        .select(explode(col("per_q")).as("r"))
-        .select(col("r.query_id").as("query_id"), col("r.nn").as("nn")))
+    val q = MultiTopK.collectQueries(quantizedQueries, vec = "codes")
+    val luts = q.vecs.map(qc => Array.tabulate(cb.m)(s => tables(s)(qc(s).toInt)))
+    lutSearch(quantized, q.ids, MultiTopK.Lut(luts), k, col("codes"))
   }
 
   /** OPQ-style rotated PQ (B13, `Common/OPQQuantizer.h:1-210`): the reference
@@ -436,7 +427,7 @@ object PQ {
     */
   def rvqSearch(queries: DataFrame, quantized: DataFrame, rvq: Rvq,
       k: Int): DataFrame = {
-    // ONE-scan aggregate form (r16, [[LutBatchTopK]]): same LUT doubles as
+    // ONE-scan aggregate form (r16, [[MultiTopK]]): same LUT doubles as
     // the former per-query UDF (identical tabulate body), same per-pair sum
     // as [[RvqLutDistExpr]] — results bit-identical, no (query, vector)
     // joined rows.
@@ -447,8 +438,8 @@ object PQ {
     // arrays themselves (a uniform driver-side stride would read the wrong
     // cell, or out of bounds, the moment one subspace diverges)
     val c1 = rvq.cb1; val c2 = rvq.cb2
-    val (qids, qvecs) = BatchTopK.collectQueries(queries)
-    val luts = qvecs.map { q =>
+    val qs = MultiTopK.collectQueries(queries)
+    val luts = qs.vecs.map { q =>
       Array.tabulate(c1.m) { s =>
         val n1 = c1.centers(s).length; val n2 = c2.centers(s).length
         Array.tabulate(n1 * n2) { idx =>
@@ -464,12 +455,7 @@ object PQ {
       }
     }
     val n2 = Array.tabulate(c2.m)(s => c2.centers(s).length)
-    graft.operators.Knn.explodeRanked(
-      quantized
-        .agg(LutBatchTopK.rvqTopk(col("id"), col("codes1"), col("codes2"),
-          qids, luts, n2, k).as("per_q"))
-        .select(explode(col("per_q")).as("r"))
-        .select(col("r.query_id").as("query_id"), col("r.nn").as("nn")))
+    lutSearch(quantized, qs.ids, MultiTopK.Lut(luts, n2), k, col("codes1"), col("codes2"))
   }
 
   def reconstruct(quantized: DataFrame, cb: Codebooks): DataFrame =

@@ -32,7 +32,7 @@ object Knn {
     * distances — for callers that merge further (scatter-gather) before the
     * final rounded projection.
     *
-    * Plan: ONE scan of the corpus through [[graft.functions.BatchTopK]] (all
+    * Plan: ONE scan of the corpus through [[graft.functions.MultiTopK]] (all
     * queries ride inside the aggregate; per-query bounded buffers update
     * map-side). The broadcast-join formulation ([[searchAggViaJoin]])
     * materializes a joined row per (query, vector) pair first — same
@@ -43,12 +43,10 @@ object Knn {
       corpus: DataFrame,
       k: Int,
       metric: String = "l2sq"): DataFrame = {
-    import graft.functions.BatchTopK
-    val (qids, qvecs) = BatchTopK.collectQueries(queries)
-    corpus
-      .agg(BatchTopK.batchTopk(col("id"), col("vec"), qids, qvecs, k, metric).as("per_q"))
-      .select(explode(col("per_q")).as("r"))
-      .select(col("r.query_id").as("query_id"), col("r.nn").as("nn"))
+    import graft.functions.MultiTopK
+    val q = MultiTopK.collectQueries(queries)
+    MultiTopK.search(corpus, q.ids, MultiTopK.Exact(q.vecs, metric),
+      MultiTopK.AllQueries(k), col("id"), col("vec"))
   }
 
   /** Join-formulated [[searchAgg]] — kept as the reference dataflow (tested

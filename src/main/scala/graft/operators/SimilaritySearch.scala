@@ -235,7 +235,7 @@ object SimilaritySearch {
 
   /** Hard-negative mining for contrastive training: for each anchor, the k
     * nearest corpus vectors with a DIFFERENT label. ONE label-aware bounded
-    * top-k corpus scan ([[graft.functions.LabeledBatchTopK]]): every anchor
+    * top-k corpus scan ([[graft.functions.MultiTopK.Labeled]]): every anchor
     * rides inside the aggregate with its label, each corpus row updates the
     * anchors whose label differs, and no per-label pass or per-pair
     * label-predicate join ever forms — the scan count is 1 regardless of
@@ -246,16 +246,20 @@ object SimilaritySearch {
       vectors: DataFrame, // (id, vec, label)
       k: Int,
       metric: String = "cos"): DataFrame = {
-    import graft.functions.LabeledBatchTopK
-    val (qids, qvecs, qlabels) = LabeledBatchTopK.collectQueries(
-      vectors.select(col("id").as("query_id"), col("vec").as("qvec"),
-        col("label").as("qlabel")))
     Knn.explodeRanked(
-      vectors
-        .agg(LabeledBatchTopK.labeledBatchTopk(col("id"), col("vec"),
-          col("label"), qids, qvecs, qlabels, 0, k, metric).as("per_q"))
-        .select(explode(col("per_q")).as("r"))
-        .select(col("r.query_id").as("query_id"), col("r.neg").as("nn")))
+      labeledSearch(vectors, 0, k, metric).select(col("query_id"), col("neg").as("nn")))
+  }
+
+  /** Every vector of `(id, vec, label)` as an anchor, through ONE
+    * label-aware [[graft.functions.MultiTopK]] scan of the same vectors →
+    * `(query_id, pos, neg)`.
+    */
+  private def labeledSearch(vectors: DataFrame, kPos: Int, kNeg: Int,
+      metric: String): DataFrame = {
+    import graft.functions.MultiTopK
+    val q = MultiTopK.collectQueries(vectors, "id", "vec", Some("label"))
+    MultiTopK.search(vectors, q.ids, MultiTopK.Exact(q.vecs, metric),
+      MultiTopK.Labeled(kPos, kNeg, q.ids, q.labels), col("id"), col("vec"), col("label"))
   }
 
   /** Triplet mining for contrastive training: for every anchor, its nearest
@@ -264,7 +268,7 @@ object SimilaritySearch {
     * k = 1), plus the margin `neg_dist − pos_dist` (negative margin = the
     * hard triplet a metric-learning loss actually moves). Both buffers fill
     * in the SAME single label-aware corpus scan
-    * ([[graft.functions.LabeledBatchTopK]] with kPos = kNeg = 1) — pre-r10
+    * ([[graft.functions.MultiTopK.Labeled]] with kPos = kNeg = 1) — pre-r10
     * this was two per-label scan loops. Anchors whose class is a singleton
     * (no possible positive) drop out, as do anchors when only one class
     * exists — the inner-join semantics of the original formulation.
@@ -275,20 +279,13 @@ object SimilaritySearch {
   def tripletMine(
       vectors: DataFrame, // (id, vec, label)
       metric: String = "cos"): DataFrame = {
-    import graft.functions.LabeledBatchTopK
-    val (qids, qvecs, qlabels) = LabeledBatchTopK.collectQueries(
-      vectors.select(col("id").as("query_id"), col("vec").as("qvec"),
-        col("label").as("qlabel")))
-    vectors
-      .agg(LabeledBatchTopK.labeledBatchTopk(col("id"), col("vec"),
-        col("label"), qids, qvecs, qlabels, 1, 1, metric).as("per_q"))
-      .select(explode(col("per_q")).as("r"))
-      .where(size(col("r.pos")) > 0 && size(col("r.neg")) > 0)
-      .select(col("r.query_id").as("anchor"),
-        col("r.pos")(0).getField("id").as("pos_id"),
-        round(col("r.pos")(0).getField("dist"), 4).as("pos_dist"),
-        col("r.neg")(0).getField("id").as("neg_id"),
-        round(col("r.neg")(0).getField("dist"), 4).as("neg_dist"))
+    labeledSearch(vectors, 1, 1, metric)
+      .where(size(col("pos")) > 0 && size(col("neg")) > 0)
+      .select(col("query_id").as("anchor"),
+        col("pos")(0).getField("id").as("pos_id"),
+        round(col("pos")(0).getField("dist"), 4).as("pos_dist"),
+        col("neg")(0).getField("id").as("neg_id"),
+        round(col("neg")(0).getField("dist"), 4).as("neg_dist"))
       .withColumn("margin", round(col("neg_dist") - col("pos_dist"), 4))
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.{dist, RngPrune, TopKByDistance}
+import graft.functions.{dist, MultiTopK, RngPrune, TopKByDistance}
 
 /** SPANN-shaped index build + two-stage search — the Spark-native flagship
   * (SURVEY.md §7). Heads (cluster centroids / selected vectors) stay small and
@@ -741,7 +741,7 @@ object Spann {
     // partition-pruned (no head_bucket key — the in-memory/checkpointed
     // index form) and no metadata filter applies, the whole stage-2 —
     // probe + exact distance + replica-deduped bounded top-k — runs as ONE
-    // aggregate over the posting scan ([[graft.functions.SpannProbeTopK]]).
+    // aggregate over the posting scan ([[graft.functions.MultiTopK]]).
     // The stage-1 candidates and the query batch ride inside the aggregate
     // (both bounded by the batch-query contract), so no joined row is ever
     // materialized and no per-row group-hash is paid. The bucketed
@@ -749,18 +749,8 @@ object Spann {
     // whole posting buckets there, which is worth more than the fusion at
     // scale; the idFilter form keeps the join for the semi-join pushdown.
     if (idFilter.isEmpty && joinKeys == Seq("head_id")) {
-      val (qids, qvecs) = graft.functions.BatchTopK.collectQueries(queries)
-      val pairs = cand.select(col("query_id").cast("long"), col("head_id").cast("long"))
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-      val (pHeads, pOff, pIdx) =
-        graft.functions.SpannProbeTopK.buildProbeIndex(pairs, qids)
-      val agged = postings
-        .agg(graft.functions.SpannProbeTopK.probeTopk(
-          col("head_id"), col("id"), col("vec"),
-          qids, qvecs, pHeads, pOff, pIdx, k, metric).as("per_q"))
-        .select(explode(col("per_q")).as("r"))
-        .select(col("r.query_id").as("query_id"), col("r.nn").as("nn"))
-      return Knn.explodeRanked(agged)
+      val q = MultiTopK.collectQueries(queries)
+      return fusedStage2(cand, postings, q.ids, MultiTopK.Exact(q.vecs, metric), k, col("vec"))
     }
     val probed = cand.join(postings, joinKeys)
     val kept = idFilter match {
@@ -777,6 +767,24 @@ object Spann {
     Knn.explodeRanked(
       hits.groupBy(col("query_id"))
         .agg(TopKByDistance.topkDistinct(col("id"), col("pdist"), k).as("nn")))
+  }
+
+  /** The fused stage-2 shared by [[stage2]] and [[adcStage2]]: the collected
+    * stage-1 `(query_id, head_id)` candidates become the [[MultiTopK.Probe]]
+    * router, so each posting row scores (`scorer` over `scoreCols`) against
+    * only the queries that probe its head.
+    */
+  private def fusedStage2(
+      cand: DataFrame,
+      postings: DataFrame,
+      qids: Array[Long],
+      scorer: MultiTopK.Scorer,
+      k: Int,
+      scoreCols: Column*): DataFrame = {
+    val pairs = cand.select(col("query_id").cast("long"), col("head_id").cast("long"))
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    Knn.explodeRanked(MultiTopK.search(postings, qids, scorer,
+      MultiTopK.Probe(k, pairs, qids), col("id") +: scoreCols :+ col("head_id"): _*))
   }
 
   /** Two-stage SPANN search in the COMPRESSED domain (Q5 + Q11 integrated —
@@ -847,26 +855,16 @@ object Spann {
       idFilter: Option[DataFrame] = None): DataFrame = {
     // FUSED compressed probe (r16, the [[stage2]] fusion with LUT scoring):
     // unbucketed + unfiltered stage-2 runs as ONE aggregate over the coded
-    // posting scan ([[graft.functions.SpannProbeLutTopK]]); the LUTs are
+    // posting scan ([[graft.functions.MultiTopK]]); the LUTs are
     // built by the same adcLut/rotate code the per-query UDF ran, scored
     // with the same left-to-right sum — bit-identical (SpannSpec pins it).
     // Bucketed form keeps the DPP join; idFilter keeps the semi-join.
     if (idFilter.isEmpty && joinKeys == Seq("head_id")) {
-      val (qids, qvecs) = graft.functions.BatchTopK.collectQueries(queries)
-      val luts = qvecs.map(q => rcb.cb.adcLut(
+      val q = MultiTopK.collectQueries(queries)
+      val luts = q.vecs.map(v => rcb.cb.adcLut(
         scala.collection.immutable.ArraySeq.unsafeWrapArray(
-          rcb.rotate(scala.collection.immutable.ArraySeq.unsafeWrapArray(q)))))
-      val pairs = cand.select(col("query_id").cast("long"), col("head_id").cast("long"))
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-      val (pHeads, pOff, pIdx) =
-        graft.functions.SpannProbeTopK.buildProbeIndex(pairs, qids)
-      val agged = codedPostings
-        .agg(graft.functions.SpannProbeLutTopK.probeLutTopk(
-          col("head_id"), col("id"), col("codes"),
-          qids, luts, pHeads, pOff, pIdx, k).as("per_q"))
-        .select(explode(col("per_q")).as("r"))
-        .select(col("r.query_id").as("query_id"), col("r.nn").as("nn"))
-      return Knn.explodeRanked(agged)
+          rcb.rotate(scala.collection.immutable.ArraySeq.unsafeWrapArray(v)))))
+      return fusedStage2(cand, codedPostings, q.ids, MultiTopK.Lut(luts), k, col("codes"))
     }
     val spark = queries.sparkSession
     val bc = spark.sparkContext.broadcast(rcb)
@@ -1037,7 +1035,7 @@ object Spann {
     // expression per query row; nn arrives (dist, id)-sorted, so nn[0] is
     // the per-query best distance — no window needed for the ratio prune.
     // An over-budget head set routes automatically to the inverted shape:
-    // the bounded query batch rides INSIDE a [[graft.functions.BatchTopK]]
+    // the bounded query batch rides INSIDE a [[graft.functions.MultiTopK]]
     // aggregate over one scan of the heads frame — no head collect or
     // broadcast at any size (past THAT, the hier route in [[graft.AnnIndex]]
     // bounds the per-query candidate set too)
@@ -1045,11 +1043,8 @@ object Spann {
       heads, col("qvec"), probeK, metric, maxHeadRows) match {
       case Some(nn) => queries.select(col("query_id"), nn.as("nn"))
       case None =>
-        val (qids, qvecs) = graft.functions.BatchTopK.collectQueries(queries)
-        heads.agg(graft.functions.BatchTopK.batchTopk(
-          col("head_id"), col("head_vec"), qids, qvecs, probeK, metric).as("b"))
-          .select(explode(col("b")).as("qr"))
-          .select(col("qr.query_id").as("query_id"), col("qr.nn").as("nn"))
+        Knn.searchAgg(queries,
+          heads.select(col("head_id").as("id"), col("head_vec").as("vec")), probeK, metric)
     }
     val exploded = withNN
       .select(col("query_id"),

@@ -36,6 +36,14 @@ class AnnIndexSpec extends SparkSpec {
     assert(grown.count === 1001)
   }
 
+  test("an index built from (id, vec) adds an (id, vec) batch") {
+    val idx = AnnIndex(spark, synthVectors(1000).select("id", "vec"),
+      GraftConf(headRatio = 0.02, replicaCount = 4, internalK = 8)).build()
+    val grown = idx.add(Seq((5000L, Seq.fill(10)(1500f))).toDF("id", "vec"))
+    val top = grown.search(Seq((0L, Seq.fill(10)(1499f))).toDF("query_id", "qvec"), 1).head()
+    assert(top.getInt(1) === 1 && top.getLong(2) === 5000L)
+  }
+
   test("delete phases: by id, by vector, by meta; tombstones skip results") {
     val idx = freshIndex.build()
     val q = Seq((0L, Seq.fill(10)(7f))).toDF("query_id", "qvec")

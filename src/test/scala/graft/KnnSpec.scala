@@ -23,9 +23,28 @@ class KnnSpec extends SparkSpec {
   }
 
   test("aggregate plan ≡ window plan (same rows)") {
-    val a = Knn.search(synthQueries(), synthVectors(), 5)
-    val b = Knn.searchViaWindow(synthQueries(), synthVectors(), 5)
-    assert(a.exceptAll(b).count() === 0 && b.exceptAll(a).count() === 0)
+    // besides the 10-d/3-query fixture: 7 hashed queries at 8-d and 32-d for
+    // every metric, so the aggregate's 4-way query interleave (plus its tail)
+    // and the dim >= 16 early-abandon / triangle-reject L2 branch run too
+    def hashed(n: Int, d: Int, idCol: String, vecCol: String, salt: Int) =
+      spark.range(n).select(col("id").as(idCol),
+        transform(sequence(lit(1), lit(d)),
+          j => (hash(col("id"), j, lit(salt)) % 1000 / 100.0).cast("float")).as(vecCol))
+    val inputs = Seq((synthQueries(), synthVectors(), "l2sq")) ++ (for {
+      d <- Seq(8, 32)
+      metric <- Seq("l2sq", "dot", "ip", "cos")
+    } yield (hashed(7, d, "query_id", "qvec", 1), hashed(400, d, "id", "vec", 2), metric))
+    for ((queries, corpus, metric) <- inputs) {
+      val a = Knn.search(queries, corpus, 5, metric)
+      val b = Knn.searchViaWindow(queries, corpus, 5, metric)
+      assert(a.exceptAll(b).count() === 0 && b.exceptAll(a).count() === 0)
+    }
+  }
+
+  test("duplicate query ids fail loudly, naming the id") {
+    val dup = synthQueries(3).union(synthQueries(2)) // ids 0, 1, 2, 0, 1
+    val err = intercept[IllegalArgumentException](Knn.search(dup, synthVectors(), 3))
+    assert(err.getMessage.contains("duplicate query_id 0"), err.getMessage)
   }
 
   test("filtered search never returns excluded meta (FilterTest.cpp:52-56)") {

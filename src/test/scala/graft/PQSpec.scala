@@ -165,6 +165,17 @@ class PQSpec extends SparkSpec {
     assert(rvqGot === rvqRef, "rvq")
   }
 
+  test("LUT scoring rejects codes from a codebook with more subspaces") {
+    val cb = PQ.train(corpus, dim = 6, m = 3, k = 16, maxIter = 2)
+    val wide = PQ.train(corpus, dim = 6, m = 6, k = 16, maxIter = 2)
+    val wideCodes = PQ.quantize(corpus, wide).select(col("id"), col("codes"))
+    val err = intercept[Exception](PQ.adcSearch(queries, wideCodes, cb, 5).collect())
+    val named = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case e: IllegalArgumentException => e.getMessage }
+    assert(named.exists(m => m.contains("carries 6 codes") && m.contains("have 3 subspaces")),
+      s"not the named codes/LUT mismatch: $err")
+  }
+
   test("ADC recall is high on clustered data (PQ's operating regime)") {
     import spark.implicits._
     // 10 tight 4-d blobs at c*100 ± small jitter; 16 centroids per 2-d

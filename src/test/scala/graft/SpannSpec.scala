@@ -30,7 +30,14 @@ class SpannSpec extends SparkSpec {
     // the shared explodeRanked, so compare pre-round via the raw buffers:
     // the public surface compares (query, rank, id, dist) exactly)
     import graft.functions.TopKByDistance
-    for (metric <- Seq("l2sq", "cos")) {
+    // besides the 6-d testdata: a hashed 32-d corpus with 7 queries
+    def hashed(n: Int, idCol: String, vecCol: String, salt: Int) =
+      spark.range(n).select(col("id").as(idCol),
+        transform(sequence(lit(1), lit(32)),
+          j => (hash(col("id"), j, lit(salt)) % 1000 / 100.0).cast("float")).as(vecCol))
+    val inputs = Seq((corpus, queries),
+      (hashed(600, "id", "vec", 2), hashed(7, "query_id", "qvec", 1)))
+    for ((corpus, queries) <- inputs; metric <- Seq("l2sq", "cos", "dot", "ip")) {
       val heads = Spann.selectHeadsModulo(corpus, 50)
       val postings = Spann.buildPostings(corpus, heads, 4, metric = metric)
       val fused = Spann.searchTwoStage(queries, heads, postings, 10, 8,
@@ -85,6 +92,17 @@ class SpannSpec extends SparkSpec {
       .collect().map(r =>
         (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
     assert(fused === ref)
+  }
+
+  test("a stage-1 candidate naming a query outside the batch fails loudly") {
+    val heads = Spann.selectHeadsModulo(corpus, 50)
+    val postings = Spann.buildPostings(corpus, heads, 4)
+    val cand = Spann.candidateHeads(queries, heads, 8)
+    val dropped = queries.select(min("query_id")).head().get(0).asInstanceOf[Number].longValue
+    val err = intercept[IllegalArgumentException](Spann.searchFromCandidates(
+      cand, queries.where(col("query_id") =!= dropped), postings, 10))
+    assert(err.getMessage.contains(s"query_id $dropped is not in the query batch"),
+      err.getMessage)
   }
 
   test("postingAudit histogram: exact lengths, mass adds up to posting rows") {
