@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.NearestHeadsExpr
 import graft.operators.{Eval, Knn, Mutations, Spann}
 import graft.sources.IndexStore
 
@@ -18,7 +19,15 @@ import graft.sources.IndexStore
   *
   * State: `vectors(id, vec[, meta])`, tombstones `deletes(id)`, and the
   * SPANN artifacts `heads`/`postings` (rebuilt on `build`, incrementally
-  * extended on `add`).
+  * extended on `add`). The head table is RESIDENT, as the reference keeps
+  * its head index in memory: wherever an index comes into being (`build`,
+  * [[AnnIndex.load]], `rebalance`, and `refineIndex` through `build`) it is
+  * collected once into a driver-local relation, with its row count as the
+  * head-count hint. Posting assignment, the hier routing state, `add` and
+  * every search then read it with no Spark job and no corpus scan. A head
+  * set over the [[graft.functions.NearestHeadsExpr.collectBounded]] budget
+  * ([[Spann.MaxBroadcastHeads]] rows) stays the lazy frame, searched
+  * through the join/hier routes.
   */
 class AnnIndex private (
     val spark: SparkSession,
@@ -87,24 +96,25 @@ class AnnIndex private (
             splitFactor = conf.get("splitfactor").toInt,
             metric = conf.metric)
       } else Spann.selectHeadsModulo(live, everyNth)
-    // count ONCE at build; the hint rides in the instance (and into save's
-    // config), so neither this build's routing decision nor any later
-    // search-path hierState recomputes the head frame
-    val hn = h.count()
-    val raw = hierOver(h, hn) match {
+    // collect ONCE at build; the resident table and its count ride in the
+    // instance (the count also into save's config), so neither this build's
+    // routing decision and posting assignment nor any later search re-reads
+    // the corpus for its heads
+    val (heads, hn) = AnnIndex.resident(spark, h)
+    val raw = hierOver(heads, hn) match {
       case Some((sh, routing)) =>
         // routed expression form (falls back to the hier join automatically
         // when the routing table outgrows the expression's collect budget)
         Spann.buildPostingsRouted(live, sh, routing, conf.replicaCount,
           conf.superK, conf.metric)
       case None =>
-        Spann.buildPostings(live, h, conf.replicaCount, conf.metric)
+        Spann.buildPostings(live, heads, conf.replicaCount, conf.metric)
     }
     val p = Spann.truncatePostings(raw, conf.postingLimit)
     // eager checkpoint: materialize under this plan's own execution (a lazy
     // one would compute inside a later search and log unregistered-accumulator
     // errors from DAGScheduler)
-    copy(heads = Some(h), postings = Some(p.localCheckpoint(true)),
+    copy(heads = Some(heads), postings = Some(p.localCheckpoint(true)),
       headCountHint = Some(hn))
   }
 
@@ -121,14 +131,7 @@ class AnnIndex private (
     * `routeReplicas` nearest super-heads.
     */
   private lazy val hierState: Option[(DataFrame, DataFrame)] =
-    heads.flatMap(h => hierOver(h, cachedHeadCount.getOrElse(0L)))
-
-  /** Head count, computed at most once per instance: the build/load hint when
-    * present, else one bounded count job (heads are the small side by
-    * contract) memoized for the instance's lifetime.
-    */
-  private lazy val cachedHeadCount: Option[Long] =
-    heads.map(h => headCountHint.getOrElse(h.count()))
+    for (h <- heads; n <- headCountHint; routed <- hierOver(h, n)) yield routed
 
   /** Routing state over an arbitrary head set — shared by [[build]] (posting
     * assignment) and the search path, so both switch levels at the SAME
@@ -409,8 +412,8 @@ class AnnIndex private (
     * in place on the facade; a loaded bucketed layout gets its
     * `head_bucket` partition column re-derived, and stored PQ codes are
     * re-joined onto the re-assigned rows (codes describe vectors, not
-    * heads, so they survive re-assignment verbatim). Head-count hint is
-    * invalidated (split/merge changes it).
+    * heads, so they survive re-assignment verbatim). The new head table is
+    * held resident with its new count (split/merge changes it).
     */
   def rebalance(maxLen: Int, minLen: Int, toFixpoint: Boolean = false): AnnIndex = {
     val (h, p) = requireBuilt()
@@ -425,8 +428,9 @@ class AnnIndex private (
     val p2 =
       if (p.columns.contains("codes")) p2bucketed.join(storedCodes.get, Seq("id"))
       else p2bucketed
-    copy(heads = Some(h2.localCheckpoint(true)),
-      postings = Some(p2.localCheckpoint(true)), headCountHint = None)
+    val (heads, hn) = AnnIndex.resident(spark, h2.localCheckpoint(true))
+    copy(heads = Some(heads), postings = Some(p2.localCheckpoint(true)),
+      headCountHint = Some(hn))
   }
 
   /** Recall@k of the approximate path vs exact, on given queries. */
@@ -438,7 +442,7 @@ class AnnIndex private (
     val (h, p) = requireBuilt()
     IndexStore.save(dir, h, p, Some(deleted),
       IndexStore.IndexConfig(conf.metric, dimension, conf.replicaCount,
-        conf.headBuckets, cachedHeadCount.getOrElse(-1L)),
+        conf.headBuckets, headCountHint.getOrElse(-1L)),
       quantizer = quantizer,
       codes = codesTable)
     vectors.write.mode("overwrite").parquet(s"$dir/vectors")
@@ -478,6 +482,21 @@ object AnnIndex {
     if (vectors.columns.contains("meta")) vectors
     else vectors.withColumn("meta", lit(null).cast("string"))
 
+  /** The head table `(head_id, head_vec)` collected ONCE under the
+    * [[NearestHeadsExpr.collectBounded]] budget into a driver-local relation
+    * (whose stage-1 collect runs no job), or `heads` itself when over the
+    * `maxRows` budget; with the head count either way.
+    */
+  private[graft] def resident(spark: SparkSession, heads: DataFrame,
+      maxRows: Int = Spann.MaxBroadcastHeads): (DataFrame, Long) = {
+    val sel = heads.select("head_id", "head_vec")
+    NearestHeadsExpr.collectBounded(sel, maxRows) match {
+      case (n, Some(rows)) =>
+        (spark.createDataFrame(java.util.Arrays.asList(rows: _*), sel.schema), n)
+      case (n, None) => (heads, n)
+    }
+  }
+
   /** Create over a vector table `(id, vec[, meta])`. */
   def apply(spark: SparkSession, vectors: DataFrame, conf: GraftConf = GraftConf()): AnnIndex =
     new AnnIndex(spark, conf, withMeta(vectors), emptyDeletes(spark), None, None)
@@ -490,11 +509,12 @@ object AnnIndex {
       replicaCount = l.config.replicaCount,
       headBuckets = l.config.headBuckets)
     val vectors = spark.read.parquet(s"$dir/vectors")
+    val (heads, hn) = resident(spark, l.heads)
     new AnnIndex(spark, conf, vectors,
       l.deletes.getOrElse(emptyDeletes(spark)),
-      Some(l.heads), Some(l.postings), // head_bucket kept → pruned stage-2 scans
+      Some(heads), Some(l.postings), // head_bucket kept → pruned stage-2 scans
       l.quantizer,
-      headCountHint = Some(l.config.headCount).filter(_ >= 0),
+      headCountHint = Some(hn),
       storedCodes = l.codes)
   }
 

@@ -15,6 +15,11 @@ package graft.functions
   * partial sum already exceeds the buffer's current worst can be abandoned
   * mid-vector — exact (it could never be inserted) and profitable once
   * vectors are wide; gated on dim >= [[AbandonMinDim]].
+  *
+  * Multi-query kernels ([[updateAll]], [[updateRouted]]) and the narrow
+  * [[scanFlat]] paths interleave four pairs per pass with four independent
+  * accumulators: each pair's sum keeps its own left-to-right order, so the
+  * result is bit-identical to the one-pair-at-a-time loop.
   */
 object DistKernel {
   final val L2 = 0
@@ -279,6 +284,74 @@ object DistKernel {
         }
       }
     }
+  }
+
+  /** ONE corpus row against the routed queries `idx[from, to)`, except query
+    * `skip` (-1: none), each into its own buffer `bufs(bOff + qi)` — the
+    * [[MultiTopK]] routed slice (SPANN probe, label router, and the ragged
+    * all-queries fallback). Each pair is [[pair]] over the first
+    * `min(v.length, q.length)` components, offered through `wouldAccept`.
+    *
+    * FOUR routed queries per pass over `v`, with four independent
+    * accumulators: each sum is still strict left-to-right, so every pair's
+    * distance and every buffer's insert sequence (NaN included) are
+    * bit-identical to the one-at-a-time loop — the four serial FP chains
+    * just overlap, the [[updateAll]]/[[scanFlat]] interleave. A block whose
+    * queries disagree on the prefix length, and the tail of the slice, go
+    * one at a time; the `skip` lane of a block is scored and dropped.
+    */
+  def updateRouted(v: Array[Double], vNorm: Double, rowId: Long,
+      qvecs: Array[Array[Double]], qNorms: Array[Double], tag: Int,
+      bufs: Array[TopKBuffer], bOff: Int, idx: Array[Int], from: Int, to: Int,
+      skip: Int): Unit = {
+    val n = v.length
+    @inline def accept(qi: Int, d: Double): Unit = {
+      val buf = bufs(bOff + qi)
+      if (buf.wouldAccept(d)) buf.insert(d, rowId)
+    }
+    // a block lane's raw sum, finished as pair() finishes it
+    @inline def offer(qi: Int, s: Double): Unit = if (qi != skip) accept(qi, tag match {
+      case L2 | Dot => s
+      case Ip => -s
+      case _ =>
+        val denom = math.sqrt(qNorms(qi) * vNorm)
+        if (denom == 0.0) 1.0 else 1.0 - s / denom
+    })
+    @inline def one(qi: Int): Unit = if (qi != skip) {
+      val qv = qvecs(qi)
+      accept(qi, pair(qv, v, math.min(n, qv.length), tag, qNorms(qi), vNorm))
+    }
+    var p = from
+    while (p + 4 <= to) {
+      val i0 = idx(p); val i1 = idx(p + 1); val i2 = idx(p + 2); val i3 = idx(p + 3)
+      val q0 = qvecs(i0); val q1 = qvecs(i1); val q2 = qvecs(i2); val q3 = qvecs(i3)
+      val m = math.min(n, q0.length)
+      if (q1.length == q0.length && q2.length == q0.length && q3.length == q0.length) {
+        var s0 = 0.0; var s1 = 0.0; var s2 = 0.0; var s3 = 0.0
+        var i = 0
+        if (tag == L2) {
+          while (i < m) {
+            val vi = v(i)
+            val x0 = q0(i) - vi; s0 += x0 * x0
+            val x1 = q1(i) - vi; s1 += x1 * x1
+            val x2 = q2(i) - vi; s2 += x2 * x2
+            val x3 = q3(i) - vi; s3 += x3 * x3
+            i += 1
+          }
+        } else {
+          while (i < m) {
+            val vi = v(i)
+            s0 += q0(i) * vi; s1 += q1(i) * vi; s2 += q2(i) * vi; s3 += q3(i) * vi
+            i += 1
+          }
+        }
+        offer(i0, s0); offer(i1, s1); offer(i2, s2); offer(i3, s3)
+      } else {
+        one(i0); one(i1); one(i2); one(i3)
+      }
+      p += 4
+    }
+    while (p < to) { one(idx(p)); p += 1 }
   }
 
   /** ONE corpus row against ALL flattened queries, each with its own bounded

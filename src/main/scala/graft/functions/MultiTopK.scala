@@ -32,6 +32,11 @@ import MultiTopK._
   *    candidates name it); or [[MultiTopK.Labeled]] (same label without
   *    self → `pos`, other label → `neg`).
   *
+  * Exact rows fed to every query go through [[DistKernel.updateAll]]; a
+  * routed slice (and the ragged fallback) goes through
+  * [[DistKernel.updateRouted]], which scores four of the slice's queries per
+  * pass over the row.
+  *
   * Exactness: per-pair scores are the same strict left-to-right double sums
   * as [[VectorDistance]] / [[LutCodesDistExpr]] / [[RvqLutDistExpr]], and a
   * buffer keeps the (dist, id)-ordered set whatever the insertion order, so
@@ -123,10 +128,12 @@ case class MultiTopK(
           DistKernel.updateAll(v, e.flatQ, e.qNorms, e.dim, e.tag, bufs, rowId,
             vNorm, e.sqrtQNorms)
         } else {
-          // routed queries, or the ragged fallback (mixed query dims): one
-          // prefix distance per pair
-          exactSlice(e, v, vNorm, rowId, bufs, 0, idx, from, to, skip)
-          exactSlice(e, v, vNorm, rowId, bufs, nq, idx, negFrom, negTo, -1)
+          // routed queries, or the ragged fallback (mixed query dims): four
+          // routed queries per pass, one prefix distance per pair
+          DistKernel.updateRouted(v, vNorm, rowId, e.qvecs, e.qNorms, e.tag, bufs, 0,
+            idx, from, to, skip)
+          DistKernel.updateRouted(v, vNorm, rowId, e.qvecs, e.qNorms, e.tag, bufs, nq,
+            idx, negFrom, negTo, -1)
         }
       case l: Lut =>
         val c1V = children(1).eval(input)
@@ -144,25 +151,6 @@ case class MultiTopK(
         lutSlice(l, c1, c2, m, rowId, bufs, nq, idx, negFrom, negTo, -1)
     }
     bufs
-  }
-
-  private def exactSlice(e: Exact, v: Array[Double], vNorm: Double, rowId: Long,
-      bufs: Array[TopKBuffer], bOff: Int, idx: Array[Int], from: Int, to: Int,
-      skip: Int): Unit = {
-    val n = v.length
-    val qvecs = e.qvecs; val tag = e.tag; val qNorms = e.qNorms
-    var p = from
-    while (p < to) {
-      val qi = idx(p)
-      if (qi != skip) {
-        val qv = qvecs(qi)
-        val m = math.min(n, qv.length)
-        val d = DistKernel.pair(qv, v, m, tag, qNorms(qi), vNorm)
-        val buf = bufs(bOff + qi)
-        if (buf.wouldAccept(d)) buf.insert(d, rowId)
-      }
-      p += 1
-    }
   }
 
   private def lutSlice(l: Lut, c1: ArrayData, c2: ArrayData, m: Int, rowId: Long,

@@ -288,14 +288,8 @@ object RoutedNearestHeadsExpr {
     */
   def fromFramesBounded(superHeads: DataFrame, routing: DataFrame, vec: Column,
       r: Int, superK: Int, metric: String, maxRows: Int): Option[Column] = {
-    def boundedCollect(df: DataFrame): Option[Array[org.apache.spark.sql.Row]] = {
-      val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-      if (est <= NearestHeadsExpr.SafeCollectBytes) {
-        val rows = df.collect()
-        if (rows.length > maxRows) None else Some(rows)
-      } else if (df.count() > maxRows) None
-      else Some(df.collect())
-    }
+    def boundedCollect(df: DataFrame): Option[Array[org.apache.spark.sql.Row]] =
+      NearestHeadsExpr.collectBounded(df, maxRows)._2
     def vecOf(a: Any): Array[Double] = a match {
       case s: scala.collection.Seq[_] => s.map {
         case f: java.lang.Float  => f.toDouble
@@ -348,27 +342,43 @@ object NearestHeadsExpr {
   /** [[fromHeads]] with a driver-collect budget: over-budget head frames
     * return None and the caller routes to its join/hier form instead of
     * this in-expression scan — the automatic broadcast-vs-routed switch
-    * (round-11 verdict: a size guard, not a caller decision). The driver
-    * never materializes more than a [[SafeCollectBytes]]-estimated frame
-    * before a decision is made: small-estimate frames are collected (a
-    * driver-safe amount by construction, even when the ROW budget then
-    * fails post-hoc and routes to the join form), estimate-heavy frames
-    * never collect without a row count. Guard shape matters:
-    * a `limit(n+1).collect()` probe executes CollectLimit's sequential
-    * scale-up waves (tripled the posting-build heads scan), and an
-    * unconditional `count()` adds a full extra scan per call (+20% on the
-    * two-stage search benchmark) — so frames the optimizer's size estimate
-    * already proves driver-safe are collected in ONE job and row-checked
-    * post-hoc; only estimate-heavy frames pay the count.
+    * (round-11 verdict: a size guard, not a caller decision). The budget is
+    * [[collectBounded]]'s. RDD-born and checkpointed head frames (any filter
+    * over a `localCheckpoint`ed corpus, e.g. the modulo head selection) have
+    * no size estimate, so every call pays a count AND a collect, each a full
+    * scan of the frame's source — which is why [[graft.AnnIndex]] collects
+    * its heads once, where an index comes into being, and keeps them as a
+    * driver-local relation (a size estimate, and a collect that runs no job).
     */
   def fromHeadsBounded(heads: DataFrame, vec: Column, r: Int, metric: String,
-      maxRows: Int): Option[Column] = {
-    val est = heads.queryExecution.optimizedPlan.stats.sizeInBytes
+      maxRows: Int): Option[Column] =
+    collectBounded(heads.select("head_id", "head_vec"), maxRows)._2
+      .map(fromRows(_, vec, r, metric))
+
+  /** `df`'s rows on the driver when there are at most `maxRows` of them
+    * (None otherwise), with the row count either way. The driver never
+    * materializes more than a [[SafeCollectBytes]]-estimated frame before
+    * the decision: small-estimate frames are collected (a driver-safe amount
+    * by construction, even when the ROW budget then fails post-hoc),
+    * estimate-heavy frames never collect without a row count. Guard shape
+    * matters: a `limit(n+1).collect()` probe executes CollectLimit's
+    * sequential scale-up waves (tripled the posting-build heads scan), and
+    * an unconditional `count()` adds a full extra scan per call (+20% on the
+    * two-stage search benchmark) — so frames the optimizer's size estimate
+    * already proves driver-safe are collected in ONE job and row-checked
+    * post-hoc; only estimate-heavy frames pay the count (RDD-born and
+    * checkpointed frames always do: they carry no size estimate).
+    */
+  def collectBounded(df: DataFrame, maxRows: Int)
+      : (Long, Option[Array[org.apache.spark.sql.Row]]) = {
+    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
     if (est <= SafeCollectBytes) {
-      val rows = heads.select("head_id", "head_vec").collect()
-      if (rows.length > maxRows) None else Some(fromRows(rows, vec, r, metric))
-    } else if (heads.count() > maxRows) None
-    else Some(fromHeads(heads, vec, r, metric))
+      val rows = df.collect()
+      (rows.length.toLong, if (rows.length > maxRows) None else Some(rows))
+    } else {
+      val n = df.count()
+      (n, if (n > maxRows) None else Some(df.collect()))
+    }
   }
 
   private def fromRows(rows: Array[org.apache.spark.sql.Row], vec: Column,

@@ -496,4 +496,105 @@ class AnnIndexSpec extends SparkSpec {
     assert(!cur.search(q0, 5).collect().map(_.getLong(2)).contains(0L))
     assert(cur.recall(synthQueries(5), 5) >= 0.8)
   }
+
+  /** A hashed 16-d corpus behind an RDD-born frame: like a generated or
+    * ingested corpus, its plan carries no size estimate.
+    */
+  private def rddCorpus(n: Int) = {
+    val df = spark.range(n).select(col("id"),
+      transform(sequence(lit(1), lit(16)),
+        j => (hash(col("id"), j, lit(3)) % 1000 / 100.0).cast("float")).as("vec"))
+    spark.createDataFrame(df.rdd, df.schema)
+  }
+
+  private lazy val hashedQueries = spark.range(9).select(col("id").as("query_id"),
+    transform(sequence(lit(1), lit(16)),
+      j => (hash(col("id"), j, lit(4)) % 1000 / 100.0).cast("float")).as("qvec"))
+    .collect().toSeq.map(r => (r.getLong(0), r.getSeq[Float](1))).toDF("query_id", "qvec")
+
+  private val residentConf = GraftConf(headRatio = 0.05, replicaCount = 3, internalK = 6)
+
+  /** Input records the tasks of `body` read (cached and checkpointed blocks
+    * included), counted by a listener.
+    */
+  private def recordsRead(body: => Unit): Long = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicLong
+    val l = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => n.addAndGet(m.inputMetrics.recordsRead))
+    }
+    org.apache.spark.ListenerBusDrain.drain(sc)
+    sc.addSparkListener(l)
+    try { body; org.apache.spark.ListenerBusDrain.drain(sc) }
+    finally sc.removeSparkListener(l)
+    n.get
+  }
+
+  test("resident heads: a search on a built index reads no corpus row") {
+    val corpus = rddCorpus(800).localCheckpoint(true)
+    val idx = AnnIndex(spark, corpus, residentConf).build()
+    assert(idx.heads.get.isLocal, "build left the head table lazy")
+    val postingRows = idx.postings.get.count()
+    val q = hashedQueries
+    // stage-1 over the resident table runs on the driver: no row read at all
+    assert(recordsRead(graft.operators.Spann.candidateHeads(
+      q, idx.heads.get, residentConf.internalK).collect()) === 0L)
+    // the whole search reads each posting row once and nothing else
+    assert(recordsRead(idx.search(q, 5).collect()) === postingRows)
+    // the lazy head frame re-reads the corpus for its count and its collect
+    val lazyHeads = graft.operators.Spann.selectHeadsModulo(corpus, 20)
+    assert(recordsRead(graft.operators.Spann.candidateHeads(
+      q, lazyHeads, residentConf.internalK).collect()) === 2 * 800L)
+  }
+
+  test("resident heads: build, add, rebalance, load and refine search like the lazy head frame") {
+    import graft.operators.Spann
+    val dir = Files.createTempDirectory("graft_resident").toString
+    val corpus = rddCorpus(800)
+    val q = hashedQueries
+    def same(idx: AnnIndex, lazyHeads: org.apache.spark.sql.DataFrame, what: String): Unit = {
+      assert(idx.heads.get.isLocal && !lazyHeads.isLocal, what)
+      val c = idx.conf
+      val live = idx.postings.get.join(idx.deleted, Seq("id"), "left_anti")
+      val buckets = if (live.columns.contains("head_bucket")) Some(c.headBuckets) else None
+      val want = Spann.searchTwoStage(q, lazyHeads, live, 5, c.internalK, c.maxDistRatio,
+        c.metric, buckets, c.wideK, c.closeRatio).collect().toSet
+      assert(want.size === 45, what)
+      assert(idx.search(q, 5).collect().toSet === want, what)
+    }
+    val built = AnnIndex(spark, corpus, residentConf).build()
+    val heads0 = Spann.selectHeadsModulo(corpus, 20)
+    same(built, heads0, "build")
+    same(built.add(rddCorpus(850).where(col("id") >= 800)), heads0, "add")
+    val reb = built.rebalance(maxLen = 80, minLen = 30)
+    val core = built.postings.get.select(col("head_id"), col("id"), col("vec"), col("dist"))
+    same(reb, Spann.rebalancePostings(heads0, core, 80, 30)._1, "rebalance")
+    built.save(dir)
+    same(AnnIndex.load(spark, dir), spark.read.parquet(s"$dir/heads"), "load")
+    val gone = spark.range(0, 800, 3).toDF("id")
+    same(built.deleteByIds(gone).refineIndex(),
+      Spann.selectHeadsModulo(corpus.join(gone, Seq("id"), "left_anti"), 20), "refine")
+  }
+
+  test("a head set over the collect budget stays the lazy frame") {
+    import graft.functions.NearestHeadsExpr
+    // RDD-born (estimate-heavy: count, then collect) and local
+    // (small-estimate: collect, then row check) head frames of 40 rows
+    val heavy = graft.operators.Spann.selectHeadsModulo(rddCorpus(800), 20)
+    val small = heavy.collect().toSeq.map(r => (r.getLong(0), r.getSeq[Float](1)))
+      .toDF("head_id", "head_vec")
+    for (h <- Seq(heavy, small)) {
+      val (n, over) = NearestHeadsExpr.collectBounded(h, 39)
+      assert(n === 40L && over.isEmpty)
+      val (n2, in) = NearestHeadsExpr.collectBounded(h, 40)
+      assert(n2 === 40L && in.map(_.length).contains(40))
+    }
+    val (kept, kn) = AnnIndex.resident(spark, heavy, maxRows = 39)
+    assert((kept eq heavy) && kn === 40L)
+    val (res, rn) = AnnIndex.resident(spark, heavy, maxRows = 40)
+    assert(res.isLocal && rn === 40L)
+    assert(res.collect().toSet === heavy.collect().toSet)
+  }
 }

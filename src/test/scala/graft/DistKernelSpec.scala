@@ -93,6 +93,49 @@ class DistKernelSpec extends AnyFunSuite {
     }
   }
 
+  test("updateRouted ≡ the one-pair-at-a-time routed loop, bit-exact " +
+    "(every slice length mod 4, skip lanes, NaN, ragged dims)") {
+    // the model: the routed slice loop as it ran before the interleave —
+    // one pair() per (row, routed query), offered through wouldAccept
+    def model(v: Array[Double], vNorm: Double, rowId: Long,
+        qs: Array[Array[Double]], qNorms: Array[Double], tag: Int,
+        bufs: Array[TopKBuffer], idx: Array[Int], from: Int, to: Int, skip: Int): Unit =
+      (from until to).map(idx).filter(_ != skip).foreach { qi =>
+        val d = DistKernel.pair(qs(qi), v, math.min(v.length, qs(qi).length), tag,
+          qNorms(qi), vNorm)
+        if (bufs(qi).wouldAccept(d)) bufs(qi).insert(d, rowId)
+      }
+    def bits(b: TopKBuffer) =
+      b.sorted.toSeq.map { case (id, d) => (id, java.lang.Double.doubleToRawLongBits(d)) }
+    val dim = 24
+    val uniform = mkVecs(9, dim, seed = 5)
+    // queries 2 and 6 shorter: blocks holding them fall back to one at a time
+    val ragged = uniform.zipWithIndex.map { case (q, i) =>
+      if (i == 2 || i == 6) q.take(dim - 5) else q }
+    // a NaN row first (it enters every buffer and is never evicted), a zero
+    // row (cosine's zero denominator) and a short row (prefix distances)
+    val vs = Array(mkVecs(1, dim, seed = 9)(0).updated(4, Double.NaN)) ++
+      mkVecs(70, dim, seed = 8) ++
+      Array(Array.fill(dim)(0.0), mkVecs(1, dim - 3, seed = 10)(0))
+    val idx = Array(7, 1, 4, 0, 8, 2, 5, 3, 6)
+    for (qs <- Seq(uniform, ragged); metric <- metrics; len <- 0 to 9;
+         skip <- Seq(-1, idx(0), idx(math.max(len - 1, 0)))) {
+      val tag = DistKernel.tag(metric)
+      val qNorms = qs.map(sqNorm)
+      val got = Array.fill(qs.length)(new TopKBuffer(5, distinct = true))
+      val want = Array.fill(qs.length)(new TopKBuffer(5, distinct = true))
+      vs.zipWithIndex.foreach { case (v, i) =>
+        DistKernel.updateRouted(v, sqNorm(v), i.toLong, qs, qNorms, tag, got, 0,
+          idx, 0, len, skip)
+        model(v, sqNorm(v), i.toLong, qs, qNorms, tag, want, idx, 0, len, skip)
+      }
+      qs.indices.foreach { qi =>
+        assert(bits(got(qi)) === bits(want(qi)),
+          s"$metric len $len skip $skip query $qi ragged ${qs eq ragged}")
+      }
+    }
+  }
+
   test("l2sq early-abandon keeps distance ties deterministic on id") {
     // many identical vectors -> every candidate hits dist == bound exactly;
     // abandon must NOT fire on equality or the smallest ids could be lost

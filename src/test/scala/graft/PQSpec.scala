@@ -96,7 +96,7 @@ class PQSpec extends SparkSpec {
   }
 
   test("LUT batch aggregate ≡ crossJoin+LUT-expression forms, bit-exact (r16)") {
-    // r16: adc/sdc/rvq search run as ONE LutBatchTopK aggregate; this pins
+    // r16: adc/sdc/rvq search run as ONE MultiTopK (Lut scorer) aggregate; this pins
     // each against the former crossJoin + per-pair-expression plan — same
     // rows, ranks AND distance doubles
     import graft.functions.{LutCodesDistExpr, RvqLutDistExpr, TopKByDistance}

@@ -131,6 +131,42 @@ class SimilaritySpec extends SparkSpec {
     assert(got.exceptAll(want).count() === 0 && want.exceptAll(got).count() === 0)
   }
 
+  test("label-routed mining ≡ join form, bit-exact, self skipped inside interleaved blocks") {
+    // every row is also a query: the pos slice of its label holds 7-8
+    // queries (a four-query block, then more), so a row's own query — the
+    // router's `skip` — falls inside an interleaved block for some rows and
+    // in the one-at-a-time tail for others
+    import graft.functions.{MultiTopK, TopKByDistance}
+    val v = spark.range(23).select(col("id"), (col("id") % 3).as("label"),
+      transform(sequence(lit(1), lit(8)),
+        j => (hash(col("id"), j, lit(5)) % 1000 / 100.0).cast("float")).as("vec"))
+      .cache()
+    def nn(r: org.apache.spark.sql.Row, i: Int) =
+      r.getSeq[org.apache.spark.sql.Row](i).map(x => (x.getLong(0), x.getDouble(1)))
+    for (metric <- Seq("l2sq", "cos", "dot", "ip")) {
+      val q = MultiTopK.collectQueries(v, "id", "vec", Some("label"))
+      val got = MultiTopK.search(v, q.ids, MultiTopK.Exact(q.vecs, metric),
+        MultiTopK.Labeled(3, 2, q.ids, q.labels), col("id"), col("vec"), col("label"))
+        .collect().map(r => r.getLong(0) -> (nn(r, 1), nn(r, 2))).toMap
+      val pairs = v.select(col("id").as("query_id"), col("vec").as("qvec"),
+          col("label").as("qlabel"))
+        .crossJoin(v)
+        .withColumn("d", graft.functions.dist.byName(metric)(col("qvec"), col("vec")))
+      def side(p: org.apache.spark.sql.Column, k: Int) =
+        pairs.where(p).groupBy(col("query_id"))
+          .agg(TopKByDistance.topk(col("id"), col("d"), k).as("nn"))
+          .collect().map(r => r.getLong(0) -> nn(r, 1)).toMap
+      val pos = side(col("label") === col("qlabel") && col("id") =!= col("query_id"), 3)
+      val neg = side(col("label") =!= col("qlabel"), 2)
+      assert(got.keySet === pos.keySet)
+      got.foreach { case (qid, (p, n)) =>
+        assert(p === pos(qid), s"metric $metric query $qid pos")
+        assert(n === neg(qid), s"metric $metric query $qid neg")
+      }
+    }
+    v.unpersist()
+  }
+
   test("knnClassify: majority vote, ties to the smaller label") {
     import spark.implicits._
     val corpus = Seq(

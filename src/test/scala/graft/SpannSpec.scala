@@ -24,40 +24,57 @@ class SpannSpec extends SparkSpec {
   }
 
   test("fused stage-2 probe ≡ join-formulated stage-2, bit-exact (r16 fusion)") {
-    // r16: the unbucketed/unfiltered stage-2 runs as ONE SpannProbeTopK
-    // aggregate; this pins it against the former join+ObjectHashAggregate
-    // form — same rows, ranks AND the same distance doubles (4dp-rounded by
-    // the shared explodeRanked, so compare pre-round via the raw buffers:
-    // the public surface compares (query, rank, id, dist) exactly)
+    // r16: the unbucketed/unfiltered stage-2 runs as ONE MultiTopK (Probe
+    // router) aggregate; this pins it against the former
+    // join+ObjectHashAggregate form — same rows, ranks AND the same distance
+    // doubles (4dp-rounded by the shared explodeRanked on both sides)
     import graft.functions.TopKByDistance
     // besides the 6-d testdata: a hashed 32-d corpus with 7 queries
     def hashed(n: Int, idCol: String, vecCol: String, salt: Int) =
       spark.range(n).select(col("id").as(idCol),
         transform(sequence(lit(1), lit(32)),
           j => (hash(col("id"), j, lit(salt)) % 1000 / 100.0).cast("float")).as(vecCol))
-    val inputs = Seq((corpus, queries),
-      (hashed(600, "id", "vec", 2), hashed(7, "query_id", "qvec", 1)))
-    for ((corpus, queries) <- inputs; metric <- Seq("l2sq", "cos", "dot", "ip")) {
+    val hc = hashed(600, "id", "vec", 2)
+    val hq = hashed(7, "query_id", "qvec", 1)
+    // one posting vector with a NaN component: every distance to it is NaN;
+    // k above any query's candidate count keeps it (ranked last) on both sides
+    val withNaN = hc.withColumn("vec", when(col("id") === 7,
+      transform(col("vec"), (x, j) => when(j === 3, lit(Float.NaN)).otherwise(x)))
+      .otherwise(col("vec")))
+    // (corpus, queries, internalK, wideK, k): internalK 1/3/5 without widening
+    // probes each of the hashed corpus's 12 heads from a few of the 7 queries,
+    // so the interleaved stage-2 kernel sees routed slices of every length
+    // mod 4 (four-query blocks plus a one-at-a-time tail)
+    val inputs = Seq((corpus, queries, 8, 24, 10), (hc, hq, 8, 24, 10)) ++
+      Seq(1, 3, 5).map(ik => (hc, hq, ik, 0, 10)) :+ ((withNaN, hq, 5, 0, 700))
+    val sliceLens = scala.collection.mutable.Set.empty[Long]
+    for ((corpus, queries, internalK, wideK, k) <- inputs;
+         metric <- Seq("l2sq", "cos", "dot", "ip")) {
       val heads = Spann.selectHeadsModulo(corpus, 50)
-      val postings = Spann.buildPostings(corpus, heads, 4, metric = metric)
-      val fused = Spann.searchTwoStage(queries, heads, postings, 10, 8,
-        metric = metric, wideK = 24, closeRatio = 1.08)
-        .collect().map(r =>
-          (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
+      val postings = Spann.buildPostings(corpus, heads, 4, metric = metric).cache()
+      // NaN ≠ NaN: compare a NaN distance as None
+      def key(r: org.apache.spark.sql.Row) =
+        (r.getLong(0), r.getInt(1), r.getLong(2), Some(r.getDouble(3)).filterNot(_.isNaN))
+      val fused = Spann.searchTwoStage(queries, heads, postings, k, internalK,
+        metric = metric, wideK = wideK, closeRatio = 1.08)
+        .collect().map(key).toSet
       // the former formulation, verbatim
-      val cand = Spann.candidateHeads(queries, heads, 8, metric = metric,
-        wideK = 24, closeRatio = 1.08)
+      val cand = Spann.candidateHeads(queries, heads, internalK, metric = metric,
+        wideK = wideK, closeRatio = 1.08)
+      sliceLens ++= cand.groupBy("head_id").count().collect().map(_.getLong(1))
       val hits = cand.join(postings, Seq("head_id"))
         .join(org.apache.spark.sql.functions.broadcast(queries), Seq("query_id"))
         .withColumn("pdist",
           graft.functions.dist.byName(metric)(col("qvec"), col("vec")))
       val ref = Knn.explodeRanked(
         hits.groupBy(col("query_id"))
-          .agg(TopKByDistance.topkDistinct(col("id"), col("pdist"), 10).as("nn")))
-        .collect().map(r =>
-          (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
-      assert(fused === ref, s"metric $metric")
+          .agg(TopKByDistance.topkDistinct(col("id"), col("pdist"), k).as("nn")))
+        .collect().map(key).toSet
+      assert(fused === ref, s"metric $metric internalK $internalK k $k")
+      if (k > 10) assert(fused.exists(_._4.isEmpty), s"NaN row dropped, metric $metric")
+      postings.unpersist()
     }
+    assert(Seq(1L, 2L, 3L, 5L, 6L, 7L).forall(sliceLens), s"slice lengths $sliceLens")
   }
 
   test("fused ADC stage-2 ≡ join-formulated compressed stage-2, bit-exact (r16)") {

@@ -11,9 +11,13 @@ sorted by name, rows sorted, values hashed (floats rounded via repr).
 Robustness + speed contract (round-10 verdict item 2):
   * per-query verdicts FLUSH to --jsonl as they complete, so a killed run
     still leaves machine-readable results for everything that finished;
-  * queries run in a process pool (--jobs, default 8) with per-connection
-    DuckDB thread caps, cutting the 207-query sweep well under the driver's
-    timeout;
+  * queries run in a process pool (--jobs, default sized from the host:
+    min(cpus, 8), capped by available memory — see default_jobs) with
+    per-connection DuckDB thread caps, keeping the sweep to minutes;
+  * a worker death breaks the whole pool and fails every query still in it
+    with BrokenProcessPool — those queries are rerun one at a time, each in
+    a fresh one-worker pool, so only a query that ALSO crashes on its own is
+    reported as a COMPARE CRASH;
   * a Spark output directory with NO oracle entry is recorded as an explicit
     rows-only verdict (the driver contract's documented weaker check for
     non-SQL-expressible ops), never silently skipped;
@@ -22,6 +26,7 @@ Robustness + speed contract (round-10 verdict item 2):
 """
 import sys, json, glob, os, time, subprocess, argparse
 from concurrent.futures import ProcessPoolExecutor, as_completed
+from concurrent.futures.process import BrokenProcessPool
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -125,11 +130,31 @@ def rows_only_one(name, out_dir):
     return v
 
 
+# peak RSS of one worker replaying the heaviest oracles at sf0.01 (a worker
+# was OOM-killed at 6.05 GB with four running on a 15 GB host); the
+# costliest-first schedule starts the heaviest queries together
+WORKER_PEAK_BYTES = 6 << 30
+
+
+def default_jobs():
+    """Pool size from the host: min(cpus, 8), and no more workers than the
+    available memory holds at WORKER_PEAK_BYTES each (at least one)."""
+    jobs = min(os.cpu_count() or 1, 8)
+    try:
+        with open("/proc/meminfo") as fh:
+            avail = next(int(ln.split()[1]) * 1024 for ln in fh
+                         if ln.startswith("MemAvailable:"))
+        jobs = min(jobs, max(1, avail // WORKER_PEAK_BYTES))
+    except (OSError, StopIteration):
+        pass
+    return jobs
+
+
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("sf_dir")
     ap.add_argument("out_dir")
-    ap.add_argument("--jobs", type=int, default=8)
+    ap.add_argument("--jobs", type=int, default=default_jobs())
     ap.add_argument("--jsonl", default=None,
                     help="per-query verdict JSONL, flushed as results land")
     ap.add_argument("--summary", default=None,
@@ -174,36 +199,59 @@ def main():
     jsonl = open(jsonl_path, "w", buffering=1)
     results = {}
     n_bad = 0
+
+    def submit(ex, name):
+        if name in oracles:
+            return ex.submit(compare_one, name, oracles[name], args.out_dir)
+        return ex.submit(rows_only_one, name, args.out_dir)
+
+    def crash(name, e):
+        return {"query": name, "mode": "error", "rows": False,
+                "schema": False, "hash": False,
+                "detail": f"COMPARE CRASH: {e}", "secs": 0.0}
+
+    def record(v):
+        nonlocal n_bad
+        results[v["query"]] = v
+        ok = v["rows"] and v["schema"] and v["hash"]
+        if not ok:
+            n_bad += 1
+        tag = "OK" if ok else "FAIL"
+        if v["mode"] == "rows_only":
+            tag += " (rows-only)"
+        line = f"{v['query']}: {tag}"
+        if not ok:
+            line += (f" schema={v['schema']} rows={v['rows']}"
+                     f"({v.get('n_spark', '?')}/{v.get('n_duck', '?')})"
+                     f" hash={v['hash']} {v['detail']}")
+        print(line, flush=True)
+        jsonl.write(json.dumps(v) + "\n")
+
+    broken = []
     with ProcessPoolExecutor(max_workers=args.jobs,
                              initializer=_init,
                              initargs=(args.sf_dir,)) as ex:
-        futs = {}
-        for name in names:
-            if name in oracles:
-                futs[ex.submit(compare_one, name, oracles[name], args.out_dir)] = name
-            else:
-                futs[ex.submit(rows_only_one, name, args.out_dir)] = name
+        futs = {submit(ex, name): name for name in names}
         for fut in as_completed(futs):
             try:
                 v = fut.result()
+            except BrokenProcessPool:
+                broken.append(futs[fut])  # the pool died, not this query
+                continue
             except Exception as e:  # one bad query must not kill the sweep
-                v = {"query": futs[fut], "mode": "error", "rows": False,
-                     "schema": False, "hash": False,
-                     "detail": f"COMPARE CRASH: {e}", "secs": 0.0}
-            results[v["query"]] = v
-            ok = v["rows"] and v["schema"] and v["hash"]
-            if not ok:
-                n_bad += 1
-            tag = "OK" if ok else "FAIL"
-            if v["mode"] == "rows_only":
-                tag += " (rows-only)"
-            line = f"{v['query']}: {tag}"
-            if not ok:
-                line += (f" schema={v['schema']} rows={v['rows']}"
-                         f"({v.get('n_spark', '?')}/{v.get('n_duck', '?')})"
-                         f" hash={v['hash']} {v['detail']}")
-            print(line, flush=True)
-            jsonl.write(json.dumps(v) + "\n")
+                v = crash(futs[fut], e)
+            record(v)
+    if broken:
+        print(f"[compare] pool broke; rerunning {len(broken)} queries serially",
+              flush=True)
+    for name in sorted(broken, key=names.index):
+        with ProcessPoolExecutor(max_workers=1, initializer=_init,
+                                 initargs=(args.sf_dir,)) as ex:
+            try:
+                v = submit(ex, name).result()
+            except Exception as e:
+                v = crash(name, f"{e} (also when run alone)")
+        record(v)
     jsonl.close()
 
     if args.summary:

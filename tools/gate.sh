@@ -34,8 +34,10 @@ if [ $? -ne 0 ]; then
   exit 4
 fi
 mv "${TYPES}.tmp" "$TYPES"
+# no --jobs: compare_oracle sizes its pool from the host (min(nproc, 8),
+# capped by available memory); a fixed 8 crashed the pool on a 4-core host
 echo "[gate] compare_oracle → $SUMMARY"
-python3 tools/compare_oracle.py "$SF" "$OUT" --jobs 8 \
+python3 tools/compare_oracle.py "$SF" "$OUT" \
   --summary "${SUMMARY}.tmp" > /tmp/graft_gate_compare.log 2>&1
 if [ ! -f "${SUMMARY}.tmp" ]; then
   echo "[gate] FAIL: compare produced no summary (see /tmp/graft_gate_compare.log)"
