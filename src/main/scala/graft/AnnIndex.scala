@@ -147,29 +147,34 @@ class AnnIndex private (
       else Some((sh, Spann.routeHeads(h, sh, conf.routeReplicas, conf.metric)))
     }
 
+  /** Stage-1 candidates `(query_id, head_id)` of a query batch: routed
+    * through super-heads past `conf.hierThreshold` (never a full-head
+    * broadcast; `superK` is that route's recall knob), else the flat scan
+    * of the resident heads with the MaxDistRatio prune and the
+    * WideK/CloseRatio widening (dense-region queries probe extra
+    * close-ranked heads).
+    */
+  private def candidates(queries: DataFrame, h: DataFrame): DataFrame =
+    hierState match {
+      case Some((sh, routing)) =>
+        Spann.candidateHeadsHier(queries, sh, routing, conf.internalK, conf.superK, conf.metric)
+      case None =>
+        Spann.candidateHeads(queries, h, conf.internalK, conf.maxDistRatio, conf.metric,
+          conf.wideK, conf.closeRatio)
+    }
+
+  /** A posting frame with the tombstoned ids removed. */
+  private def live(p: DataFrame): DataFrame = p.join(deleted, Seq("id"), "left_anti")
+
   /** SearchIndex: two-stage SPANN search; deleted ids are filtered from the
-    * result (search-time tombstone skip, `BKTIndex.cpp:875-899`). Head sets
-    * beyond `conf.hierThreshold` route through super-heads automatically
-    * (never a full-head broadcast).
+    * result (search-time tombstone skip, `BKTIndex.cpp:875-899`). A loaded
+    * index keeps IndexStore's `head_bucket` partition column, so stage-2
+    * reads only the candidates' posting buckets.
     */
   def search(queries: DataFrame, k: Int): DataFrame = {
     val (h, p) = requireBuilt()
-    val live = p.join(deleted, Seq("id"), "left_anti")
-    hierState match {
-      case Some((sh, routing)) =>
-        Spann.searchTwoStageHier(
-          queries, sh, routing, live, k, conf.internalK, conf.superK, conf.metric)
-      case None =>
-        // a loaded index keeps IndexStore's head_bucket partition column →
-        // the bucketed join enables dynamic partition pruning of the scan.
-        // conf.wideK > 0 engages the adaptive stage-1 widening (dense-region
-        // queries probe extra close-ranked heads; the hier route has its own
-        // superK recall knob instead)
-        val buckets = if (p.columns.contains("head_bucket")) Some(conf.headBuckets) else None
-        Spann.searchTwoStage(
-          queries, h, live, k, conf.internalK, conf.maxDistRatio, conf.metric,
-          buckets, conf.wideK, conf.closeRatio)
-    }
+    Spann.searchFromCandidates(candidates(queries, h), queries, live(p), k, conf.metric,
+      Some(conf.headBuckets))
   }
 
   /** Filtered SPANN search — Q4 on the approximate path (the reference
@@ -185,19 +190,9 @@ class AnnIndex private (
     */
   def searchFiltered(queries: DataFrame, k: Int, predicate: Column): DataFrame = {
     val (h, p) = requireBuilt()
-    val live = p.join(deleted, Seq("id"), "left_anti")
     val keep = Mutations.liveView(vectors, deleted).where(predicate).select(col("id"))
-    hierState match {
-      case Some((sh, routing)) =>
-        Spann.searchTwoStageHier(
-          queries, sh, routing, live, k, conf.internalK, conf.superK, conf.metric,
-          idFilter = Some(keep))
-      case None =>
-        val buckets = if (p.columns.contains("head_bucket")) Some(conf.headBuckets) else None
-        Spann.searchTwoStage(
-          queries, h, live, k, conf.internalK, conf.maxDistRatio, conf.metric,
-          buckets, conf.wideK, conf.closeRatio, idFilter = Some(keep))
-    }
+    Spann.searchFromCandidates(candidates(queries, h), queries, live(p), k, conf.metric,
+      Some(conf.headBuckets), Some(keep))
   }
 
   /** Exact search — the truth path (brute force, always available). */
@@ -299,19 +294,9 @@ class AnnIndex private (
     val q = quantizer.getOrElse(sys.error("no quantizer — call trainQuantizer() first"))
     (heads, codedPostings) match {
       case (Some(h), Some(cp)) =>
-        val live = cp.join(deleted, Seq("id"), "left_anti")
-        hierState match {
-          case Some((sh, routing)) =>
-            Spann.searchTwoStageHierAdc(
-              queries, sh, routing, live, q, k, conf.internalK, conf.superK, conf.metric)
-          case None =>
-            val buckets = if (cp.columns.contains("head_bucket")) Some(conf.headBuckets) else None
-            Spann.searchTwoStageAdc(
-              queries, h, live, q, k, conf.internalK, conf.maxDistRatio, conf.metric, buckets)
-        }
-      case _ =>
-        val live = codesTable.get.join(deleted, Seq("id"), "left_anti")
-        PQ.adcSearchOpq(queries, live, q, k)
+        Spann.adcFromCandidates(candidates(queries, h), queries, live(cp), q, k,
+          Some(conf.headBuckets))
+      case _ => PQ.adcSearchOpq(queries, live(codesTable.get), q, k)
     }
   }
 
@@ -326,8 +311,7 @@ class AnnIndex private (
       headBatch: Int,
       maxBatches: Int = 4): graft.operators.SpannResultIterator = {
     val (h, p) = requireBuilt()
-    val live = p.join(deleted, Seq("id"), "left_anti")
-    Spann.iterate(queries, h, live, headBatch, headBatch * maxBatches, conf.metric)
+    Spann.iterate(queries, h, live(p), headBatch, headBatch * maxBatches, conf.metric)
   }
 
   /** Search with metadata hydration. */

@@ -35,8 +35,7 @@ class KdtIndex private (
     /** Set on a loaded index: each stored tree's assign is partitioned by
       * `leaf_bucket = leaf % leafBuckets`, and search keys the probe join on
       * the partition column too — Catalyst then inserts a dynamic-pruning
-      * subquery so the scan touches only the probed leaves' directories (the
-      * same loaded-index DPP path the SPANN side has).
+      * subquery so the scan touches only the probed leaves' directories.
       */
     val leafBuckets: Option[Int] = None) {
 

@@ -3590,7 +3590,8 @@ object SparkEntry {
     *
     * `maxDistRatio`: mirror of `Spann.candidateHeads`' prune — candidates
     * with `hdist > ratio * best` (best = the per-query nearest head) are
-    * dropped from `ch` before stage 2 (`SPANNIndex.cpp:217-236`).
+    * dropped from `ch` before stage 2 (`SPANNIndex.cpp:217-236`), only for
+    * a query whose best is > 0.
     */
   /** Shared DuckDB chain for q18/q117: the TP-tree kNN graph + recursive
     * RNG refine, ending at CTE `fin(src, acc_ids)` (each source's pruned
@@ -3630,7 +3631,7 @@ object SparkEntry {
     val hDist = Tables.distSql("l2sq", "q.qvec", "h.head_vec")
     val sDist = Tables.distSql("l2sq", "ch.qvec", "p.vec")
     val ratioPrune =
-      maxDistRatio.map(r => s" AND hdist <= $r * best").getOrElse("")
+      maxDistRatio.map(r => s" AND (best <= 0 OR hdist <= $r * best)").getOrElse("")
     // mirror of candidateHeads' adaptive widening: top-internalK always,
     // ranks up to wideK when within closeRatio of the per-query best
     val rankCut =

@@ -7,8 +7,9 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.ColumnShim
 import org.apache.spark.sql.types._
 
-/** `lut_codes_dist(lut, codes)` → Σ_s lut[s][codes[s]] — the ADC scoring
-  * kernel (PQ.adcSearch, SPANN compressed stage-2) as a Catalyst expression.
+/** `lut_codes_dist(lut, codes)` → Σ_s lut[s][codes[s]] — the per-pair ADC
+  * score as a Catalyst expression: the join-formulated reference that
+  * [[MultiTopK.Lut]] scoring is pinned against (SpannSpec, PQSpec).
   *
   * Value-identical to the Scala-UDF form it replaces (same left-to-right
   * double sum over the same entries), but reads the `ArrayData` buffers

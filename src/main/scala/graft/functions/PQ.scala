@@ -122,17 +122,6 @@ object PQ {
     * (each LUT entry is that very subspace distance), so results are
     * bit-identical — only the hot-loop cost changes (m·dsub → m per pair).
     */
-  /** LUT×codes scoring kernel — ONE definition shared by [[adcSearch]] and
-    * SPANN's compressed stage-2 (`Spann.adcStage2`), so a fix to the ADC hot
-    * loop can never apply to one path and not the other. A codegen
-    * expression since r15: the Scala-UDF form materialized the LUT as a
-    * boxed Seq[Seq[Double]] once per (query, vector) pair — 30 M times per
-    * sf0.1 ADC scan (see [[LutCodesDistExpr]]); the double sum itself is
-    * unchanged, so scores are bit-identical.
-    */
-  private[graft] def lutCodesDist(lut: Column, codes: Column): Column =
-    LutCodesDistExpr(lut, codes)
-
   def adcSearch(queries: DataFrame, quantized: DataFrame, cb: Codebooks, k: Int): DataFrame = {
     // ONE-scan aggregate form (r16, [[MultiTopK]]): the crossJoin form
     // materialized a joined row per (query, vector) pair (30 M at the sf0.1

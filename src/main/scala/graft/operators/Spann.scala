@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{dist, MultiTopK, RngPrune, TopKByDistance}
+import graft.sources.IndexStore
 
 /** SPANN-shaped index build + two-stage search — the Spark-native flagship
   * (SURVEY.md §7). Heads (cluster centroids / selected vectors) stay small and
@@ -666,9 +667,8 @@ object Spann {
     * 1. stage-1: per query, `internalK` nearest heads (broadcast heads);
     *    prune candidates with `dist > maxDistRatio * bestDist`
     *    (`SPANNIndex.cpp:217-236`);
-    * 2. stage-2: join the pruned (query, head) pairs against `postings` on
-    *    `head_id` (partition-pruned scan), compute exact distance per posting
-    *    entry, dedup replicas (`m_deduper` ≡ groupBy min), final top-k.
+    * 2. stage-2 ([[searchFromCandidates]]): score the posting rows of the
+    *    candidate heads only, dedup replicas (`m_deduper`), final top-k.
     */
   def searchTwoStage(
       queries: DataFrame,
@@ -691,100 +691,89 @@ object Spann {
     * the entry for callers that time or cache the stages separately (the
     * serving path's head-vs-disk latency split, `SSDServing/SSDIndex.h:
     * 284-310`). Identical plan to the fused [[searchTwoStage]].
+    *
+    * `idFilter` (Q4 on the SPANN path — the reference evaluates a metadata
+    * filter per candidate before result insertion): probed posting entries
+    * semi-join the passing id set BEFORE distances are computed and BEFORE
+    * the bounded top-k, so all k slots go to predicate-passing vectors.
+    * Recall semantics mirror the reference: postings were built UNFILTERED,
+    * so a highly selective predicate thins per-head candidates — widen
+    * `internalK`/`wideK` to compensate, exactly like the reference's
+    * `MaxCheck` advice for filtered search.
     */
   def searchFromCandidates(
-      cand0: DataFrame,
+      cand: DataFrame,
       queries: DataFrame,
       postings: DataFrame,
       k: Int,
       metric: String = "l2sq",
       headBuckets: Option[Int] = None,
       idFilter: Option[DataFrame] = None): DataFrame = {
-    // disk-resident index path: postings carry the IndexStore partition
-    // column `head_bucket`; joining on it lets dynamic partition pruning
-    // skip every bucket the stage-1 candidates don't name — the dataflow
-    // form of the reference's selective posting-page reads
-    // (`ExtraFullGraphSearcher.h:1206-1290`), with no driver-side collect
-    val bucketed = headBuckets.filter(_ => postings.columns.contains("head_bucket"))
-    val cand = bucketed match {
-      case Some(b) =>
-        cand0.withColumn("head_bucket", (col("head_id") % b).cast("int"))
-      case None => cand0
-    }
-    val joinKeys = if (bucketed.isDefined) Seq("head_bucket", "head_id") else Seq("head_id")
-    stage2(cand, postings, queries, joinKeys, k, metric, idFilter)
+    val q = MultiTopK.collectQueries(queries)
+    stage2(cand, postings, q.ids, MultiTopK.Exact(q.vecs, metric), col("vec"), k,
+      headBuckets, idFilter)
   }
 
-  /** Stage-2 proper: probe `postings` with `(query_id, head_id)` candidates,
-    * score, dedup replicas, final top-k.
+  /** [[searchFromCandidates]] in the COMPRESSED domain: each probed posting
+    * entry (`codedPostings` = `(head_id, id, codes[, head_bucket])`) is
+    * scored from its stored `codes` through the query's ADC table, built by
+    * [[graft.functions.PQ.Codebooks.adcLut]] over the rotated query.
+    */
+  private[graft] def adcFromCandidates(
+      cand: DataFrame,
+      queries: DataFrame,
+      codedPostings: DataFrame,
+      rcb: graft.functions.PQ.RotatedCodebooks,
+      k: Int,
+      headBuckets: Option[Int] = None,
+      idFilter: Option[DataFrame] = None): DataFrame = {
+    import scala.collection.immutable.ArraySeq.unsafeWrapArray
+    val q = MultiTopK.collectQueries(queries)
+    val luts = q.vecs.map(v => rcb.cb.adcLut(unsafeWrapArray(rcb.rotate(unsafeWrapArray(v)))))
+    stage2(cand, codedPostings, q.ids, MultiTopK.Lut(luts), col("codes"), k,
+      headBuckets, idFilter)
+  }
+
+  /** THE stage-2, for every search form (flat or hier stage-1, exact or ADC
+    * scoring, in-memory or disk-bucketed postings, with or without an id
+    * filter): the collected stage-1 `(query_id, head_id)` candidates become
+    * the [[MultiTopK.Probe]] router, so ONE aggregate over the posting scan
+    * scores each row (`scorer` over `scoreCol`) against only the queries
+    * that probe its head, and keeps the replica-deduped bounded top-k — no
+    * joined (query, posting) row is ever materialized. Candidates number at
+    * most |Q|·max(internalK, wideK) by construction.
     *
-    * `idFilter` (Q4 on the SPANN path — the reference evaluates a metadata
-    * filter per candidate before result insertion): probed posting entries
-    * semi-join the passing id set BEFORE distances are computed and BEFORE
-    * the bounded top-k, so all k slots go to predicate-passing vectors.
-    * Scale: the semi-join keys on `id` against a predicate-pushdown scan of
-    * the corpus — shuffle ∝ probed candidates, and filtered-out entries
-    * never pay a distance kernel. Recall semantics mirror the reference:
-    * postings were built UNFILTERED, so a highly selective predicate thins
-    * per-head candidates — widen `internalK`/`wideK` to compensate, exactly
-    * like the reference's `MaxCheck` advice for filtered search.
+    * Before the aggregate the scan narrows where that buys something: a
+    * bucketed posting frame (IndexStore's `head_bucket` partition column)
+    * reads only the candidates' buckets through a static partition filter
+    * ([[graft.sources.IndexStore.inBuckets]]) — the reference's selective
+    * posting-page reads (`ExtraFullGraphSearcher.h:1206-1290`) — and an
+    * `idFilter` semi-joins only the probed heads' rows
+    * ([[graft.sources.IndexStore.pruneToHeads]]). The in-memory unfiltered
+    * scan goes in as it is. No `head_id` filter is pushed into an
+    * unfiltered scan: the router already skips unprobed rows.
     */
   private def stage2(
       cand: DataFrame,
       postings: DataFrame,
-      queries: DataFrame,
-      joinKeys: Seq[String],
-      k: Int,
-      metric: String,
-      idFilter: Option[DataFrame] = None): DataFrame = {
-    // FUSED probe (r16, guide §1.2/§2.4): when the posting scan is not
-    // partition-pruned (no head_bucket key — the in-memory/checkpointed
-    // index form) and no metadata filter applies, the whole stage-2 —
-    // probe + exact distance + replica-deduped bounded top-k — runs as ONE
-    // aggregate over the posting scan ([[graft.functions.MultiTopK]]).
-    // The stage-1 candidates and the query batch ride inside the aggregate
-    // (both bounded by the batch-query contract), so no joined row is ever
-    // materialized and no per-row group-hash is paid. The bucketed
-    // (disk-resident) form keeps the join: dynamic partition pruning skips
-    // whole posting buckets there, which is worth more than the fusion at
-    // scale; the idFilter form keeps the join for the semi-join pushdown.
-    if (idFilter.isEmpty && joinKeys == Seq("head_id")) {
-      val q = MultiTopK.collectQueries(queries)
-      return fusedStage2(cand, postings, q.ids, MultiTopK.Exact(q.vecs, metric), k, col("vec"))
-    }
-    val probed = cand.join(postings, joinKeys)
-    val kept = idFilter match {
-      case Some(f) => probed.join(f.select(col("id")), Seq("id"), "left_semi")
-      case None => probed
-    }
-    val hits = kept
-      .join(broadcast(queries), Seq("query_id"))
-      .withColumn("pdist", dist.byName(metric)(col("qvec"), col("vec")))
-    // replica dedup rides INSIDE the bounded top-k (distinct-id buffer):
-    // dist(query, id) is deterministic, so this equals the former
-    // groupBy(query_id, id).min(pdist) pre-pass without its extra
-    // near-unique-key shuffle + hash aggregate pair
-    Knn.explodeRanked(
-      hits.groupBy(col("query_id"))
-        .agg(TopKByDistance.topkDistinct(col("id"), col("pdist"), k).as("nn")))
-  }
-
-  /** The fused stage-2 shared by [[stage2]] and [[adcStage2]]: the collected
-    * stage-1 `(query_id, head_id)` candidates become the [[MultiTopK.Probe]]
-    * router, so each posting row scores (`scorer` over `scoreCols`) against
-    * only the queries that probe its head.
-    */
-  private def fusedStage2(
-      cand: DataFrame,
-      postings: DataFrame,
       qids: Array[Long],
       scorer: MultiTopK.Scorer,
+      scoreCol: Column,
       k: Int,
-      scoreCols: Column*): DataFrame = {
+      headBuckets: Option[Int],
+      idFilter: Option[DataFrame]): DataFrame = {
     val pairs = cand.select(col("query_id").cast("long"), col("head_id").cast("long"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
-    Knn.explodeRanked(MultiTopK.search(postings, qids, scorer,
-      MultiTopK.Probe(k, pairs, qids), col("id") +: scoreCols :+ col("head_id"): _*))
+    val heads = pairs.map(_._2).distinct
+    val bucketed = headBuckets.filter(_ => postings.columns.contains("head_bucket"))
+    val probed = idFilter match {
+      case Some(f) =>
+        IndexStore.pruneToHeads(postings, bucketed, heads)
+          .join(f.select(col("id")), Seq("id"), "left_semi")
+      case None => bucketed.fold(postings)(b => postings.where(IndexStore.inBuckets(b, heads)))
+    }
+    Knn.explodeRanked(MultiTopK.search(probed, qids, scorer, MultiTopK.Probe(k, pairs, qids),
+      col("id"), scoreCol, col("head_id")))
   }
 
   /** Two-stage SPANN search in the COMPRESSED domain (Q5 + Q11 integrated —
@@ -809,17 +798,9 @@ object Spann {
       maxDistRatio: Double = Double.MaxValue,
       metric: String = "l2sq",
       headBuckets: Option[Int] = None,
-      idFilter: Option[DataFrame] = None): DataFrame = {
-    val cand0 = candidateHeads(queries, heads, internalK, maxDistRatio, metric)
-    val bucketed = headBuckets.filter(_ => codedPostings.columns.contains("head_bucket"))
-    val cand = bucketed match {
-      case Some(b) =>
-        cand0.withColumn("head_bucket", (col("head_id") % b).cast("int"))
-      case None => cand0
-    }
-    val joinKeys = if (bucketed.isDefined) Seq("head_bucket", "head_id") else Seq("head_id")
-    adcStage2(cand, codedPostings, queries, joinKeys, rcb, k, idFilter)
-  }
+      idFilter: Option[DataFrame] = None): DataFrame =
+    adcFromCandidates(candidateHeads(queries, heads, internalK, maxDistRatio, metric),
+      queries, codedPostings, rcb, k, headBuckets, idFilter)
 
   /** [[searchTwoStageHier]] with the compressed stage-2 — the routed stage-0/1
     * feeding ADC scoring over stored codes.
@@ -835,59 +816,9 @@ object Spann {
       superK: Int,
       metric: String = "l2sq",
       idFilter: Option[DataFrame] = None): DataFrame =
-    adcStage2(
+    adcFromCandidates(
       candidateHeadsHier(queries, superHeads, routing, internalK, superK, metric),
-      codedPostings, queries, Seq("head_id"), rcb, k, idFilter)
-
-  /** Compressed stage-2: the per-query ADC LUT is computed once on the
-    * (broadcast-tiny) query side ([[graft.functions.PQ.Codebooks.adcLut]]);
-    * each probed posting entry costs `m` table lookups. Replica dedup rides
-    * inside the bounded distinct-id top-k exactly as the full-precision
-    * [[stage2]].
-    */
-  private def adcStage2(
-      cand: DataFrame,
-      codedPostings: DataFrame,
-      queries: DataFrame,
-      joinKeys: Seq[String],
-      rcb: graft.functions.PQ.RotatedCodebooks,
-      k: Int,
-      idFilter: Option[DataFrame] = None): DataFrame = {
-    // FUSED compressed probe (r16, the [[stage2]] fusion with LUT scoring):
-    // unbucketed + unfiltered stage-2 runs as ONE aggregate over the coded
-    // posting scan ([[graft.functions.MultiTopK]]); the LUTs are
-    // built by the same adcLut/rotate code the per-query UDF ran, scored
-    // with the same left-to-right sum — bit-identical (SpannSpec pins it).
-    // Bucketed form keeps the DPP join; idFilter keeps the semi-join.
-    if (idFilter.isEmpty && joinKeys == Seq("head_id")) {
-      val q = MultiTopK.collectQueries(queries)
-      val luts = q.vecs.map(v => rcb.cb.adcLut(
-        scala.collection.immutable.ArraySeq.unsafeWrapArray(
-          rcb.rotate(scala.collection.immutable.ArraySeq.unsafeWrapArray(v)))))
-      return fusedStage2(cand, codedPostings, q.ids, MultiTopK.Lut(luts), k, col("codes"))
-    }
-    val spark = queries.sparkSession
-    val bc = spark.sparkContext.broadcast(rcb)
-    val lutUdf = udf((q: Seq[Double]) => bc.value.cb.adcLut(
-      scala.collection.immutable.ArraySeq.unsafeWrapArray(bc.value.rotate(q))))
-    val withLut = queries
-      .withColumn("_lut", lutUdf(col("qvec").cast("array<double>")))
-      .select(col("query_id"), col("_lut"))
-    val probed = cand.join(codedPostings, joinKeys)
-    // same pre-top-k predicate semi-join as the full-precision stage2:
-    // filtered-out entries never pay the m-lookup LUT scoring
-    val kept = idFilter match {
-      case Some(f) => probed.join(f.select(col("id")), Seq("id"), "left_semi")
-      case None => probed
-    }
-    val hits = kept
-      .join(broadcast(withLut), Seq("query_id"))
-      .withColumn("pdist",
-        graft.functions.PQ.lutCodesDist(col("_lut"), col("codes")))
-    Knn.explodeRanked(
-      hits.groupBy(col("query_id"))
-        .agg(TopKByDistance.topkDistinct(col("id"), col("pdist"), k).as("nn")))
-  }
+      queries, codedPostings, rcb, k, idFilter = idFilter)
 
   /** Route each head to its `routeReplicas` nearest super-heads — the
     * broadcast-free routing table for [[searchTwoStageHier]]. Output
@@ -982,7 +913,7 @@ object Spann {
       metric: String = "l2sq",
       idFilter: Option[DataFrame] = None): DataFrame = {
     val cand = candidateHeadsHier(queries, superHeads, routing, internalK, superK, metric)
-    stage2(cand, postings, queries, Seq("head_id"), k, metric, idFilter)
+    searchFromCandidates(cand, queries, postings, k, metric, idFilter = idFilter)
   }
 
   /** Resumable two-stage iterator (Q6 over SPANN —
@@ -1059,7 +990,9 @@ object Spann {
       else exploded
     val pruned =
       if (maxDistRatio == Double.MaxValue) widened
-      else widened.where(col("hdist") <= lit(maxDistRatio) * col("_best"))
+      // the ratio means nothing against a best distance <= 0 (ip/dot are
+      // negative; a query on a head has l2sq best 0): prune only past best > 0
+      else widened.where(col("_best") <= 0 || col("hdist") <= lit(maxDistRatio) * col("_best"))
     pruned.drop("_best")
   }
 }

@@ -2,7 +2,7 @@ package graft.sources
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 import graft.functions.PQ
@@ -48,6 +48,8 @@ object IndexStore {
 
   /** head_id is hash-bucketed so the partition count stays bounded at any
     * corpus scale (raw head_id partitioning would create millions of dirs).
+    * The one head → bucket rule: this column and [[inBuckets]]' driver side
+    * compute the same `head_id % headBuckets`.
     */
   def withBucket(postings: DataFrame, headBuckets: Int): DataFrame =
     postings.withColumn("head_bucket", (col("head_id") % headBuckets).cast("int"))
@@ -333,15 +335,23 @@ object IndexStore {
   def loadFromFile(spark: SparkSession, file: String, scratchDir: String): LoadedIndex =
     load(spark, extractFile(spark, file, scratchDir))
 
-  /** Prune the postings scan to the head buckets a candidate set touches —
-    * the query-side half of the partition-pruning contract.
+  /** The static partition filter that keeps only the [[withBucket]]
+    * buckets of `headIds` — the query-side half of the partition-pruning
+    * contract: a posting scan under it reads only those bucket directories.
     */
-  def pruneToHeads(loaded: LoadedIndex, headIds: Seq[Long]): DataFrame = {
-    val buckets = headIds.map(_ % loaded.config.headBuckets).distinct
-    loaded.postings
-      .where(col("head_bucket").isin(buckets: _*))
+  def inBuckets(headBuckets: Int, headIds: Seq[Long]): Column =
+    col("head_bucket").isin(headIds.map(h => (h % headBuckets).toInt).distinct: _*)
+
+  /** Narrow a posting scan to the rows of `headIds`: with `headBuckets` (the
+    * frame carries the [[withBucket]] column) through [[inBuckets]] first,
+    * so only the candidates' buckets are read.
+    */
+  def pruneToHeads(
+      postings: DataFrame,
+      headBuckets: Option[Int],
+      headIds: Seq[Long]): DataFrame =
+    headBuckets.fold(postings)(b => postings.where(inBuckets(b, headIds)))
       .where(col("head_id").isin(headIds: _*))
-  }
 
   // ----------------------------------------------------------------------
   // Versioned publishing (serve-while-rebuilding)

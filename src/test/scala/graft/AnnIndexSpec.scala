@@ -450,6 +450,28 @@ class AnnIndexSpec extends SparkSpec {
       GraftConf.fromIni("[X]\nReplicaCount=eight", Seq("X")))
   }
 
+  test("MaxDistRatio prunes only past a positive best head distance (ip, a query on a head)") {
+    // hashed 8-d corpus: under ip every head distance is negative, and a
+    // query equal to a head has l2sq best 0 — neither may lose candidates
+    // to the default MaxDistRatio (8.0)
+    val vecs = spark.range(400).select(col("id"),
+      transform(sequence(lit(1), lit(8)),
+        j => (hash(col("id"), j) % 1000 / 100.0).cast("float")).as("vec"))
+    for (metric <- Seq("InnerProduct", "L2")) {
+      val idx = AnnIndex(spark, vecs,
+        GraftConf(headRatio = 0.05, internalK = 8, replicaCount = 2))
+        .setParameter("DistCalcMethod", metric).build()
+      // heads are every 20th id: the L2 queries ARE heads 0, 20, …, 80
+      val q = vecs.where(col("id") < 100 && col("id") % 20 === 0)
+        .select(col("id").as("query_id"), col("vec").as("qvec"))
+      val unpruned = idx.setParameter("MaxDistRatio", Double.MaxValue.toString)
+      val res = idx.search(q, 50).orderBy("query_id", "rank").collect().toSeq
+      assert(res.size === 250, s"$metric: ${res.size} of 250 rows")
+      assert(res === unpruned.search(q, 50).orderBy("query_id", "rank").collect().toSeq,
+        s"$metric: the ratio prune changed the result")
+    }
+  }
+
   test("WideK widening flows through search: results are a recall superset") {
     val fixed = freshIndex.setParameter("InternalK", "2").build()
     val wide = fixed.setParameter("WideK", "8").setParameter("CloseRatio", "4.0")

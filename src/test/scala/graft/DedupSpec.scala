@@ -364,7 +364,7 @@ class DedupSpec extends SparkSpec {
     assert(got.nonEmpty)
     // the stored layout must actually be USED: the probe keys the bucket
     // join on the band_bucket partition column → dynamic-pruning subquery
-    // (the positive DPP assertion the loaded SPANN/KDT paths have)
+    // (the positive DPP assertion the loaded KDT path has)
     val plan = probe.queryExecution.executedPlan.toString
     assert(plan.toLowerCase.contains("dynamicpruning"),
       s"stored probe must partition-prune on band_bucket; plan:\n${plan.take(3000)}")

@@ -64,7 +64,7 @@ class KdtIndexSpec extends SparkSpec {
     assert(a === b, "loaded index must reproduce the live index's results")
     // the stored layout must actually be USED: the loaded-forest search keys
     // the probe join on the leaf_bucket partition column → dynamic-pruning
-    // subquery (the positive DPP assertion the SPANN loaded path has)
+    // subquery
     assert(loaded.leafBuckets === Some(8))
     val plan = loaded.search(q, 3).queryExecution.executedPlan.toString
     assert(plan.toLowerCase.contains("dynamicpruning"),

@@ -81,17 +81,22 @@ class PlanSpec extends SparkSpec {
   }
 
   test("SPANN stage-2 is the fused probe aggregate — one posting scan, no join fan-out") {
-    // r16 fusion: the unbucketed/unfiltered stage-2 runs as ONE
-    // spann_probe_topk aggregate over the posting scan (candidates + query
-    // batch ride inside it); no joined row is materialized, partials merge
-    // map-side. The bucketed (disk-resident) form keeps the DPP join —
-    // covered by the stored-index PlanSpec entries.
-    val p = plan("q08_spann_search")
-    assert(p.contains("spann_probe_topk"), s"fused probe aggregate missing:\n$p")
-    assert(p.contains("partial_spann_probe_topk"),
-      s"probe aggregate must be partial (map-side) before the exchange:\n$p")
-    assert(!p.contains("BroadcastHashJoin") && !p.contains("SortMergeJoin") &&
-      !p.contains("ShuffledHashJoin"), s"stage-2 should not join:\n$p")
+    // every stage-2 runs as ONE spann_probe_topk aggregate over the posting
+    // scan (candidates + query batch ride inside it); no joined row is
+    // materialized, partials merge map-side. q89's id filter semi-joins the
+    // probed posting rows — the only join, and none pairs candidates with
+    // postings. The bucketed (disk-resident) form's static partition filter
+    // is asserted in SourcesSpec ("loaded-index search prunes posting
+    // partitions").
+    for ((name, filtered) <- Seq("q08_spann_search" -> false, "q89_spann_filtered" -> true)) {
+      val p = plan(name)
+      assert(p.contains("spann_probe_topk"), s"$name: fused probe aggregate missing:\n$p")
+      assert(p.contains("partial_spann_probe_topk"),
+        s"$name: probe aggregate must be partial (map-side) before the exchange:\n$p")
+      val joins = p.linesIterator.filter(_.contains("Join")).toSeq
+      assert(joins.forall(_.contains("LeftSemi")) && joins.nonEmpty == filtered,
+        s"$name: stage-2 should join only the id filter, found $joins:\n$p")
+    }
   }
 
   test("optimizer rewrites window top-k to the bounded aggregate") {

@@ -227,16 +227,21 @@ class SourcesSpec extends SparkSpec {
     IndexStore.save(dir, heads, Spann.buildPostings(corpus, heads, 2), None,
       IndexStore.IndexConfig("l2sq", 10, 2, 4))
     val loaded = IndexStore.load(spark, dir)
-    val pruned = IndexStore.pruneToHeads(loaded, Seq(30L, 60L))
+    val pruned = IndexStore.pruneToHeads(
+      loaded.postings, Some(loaded.config.headBuckets), Seq(30L, 60L))
     val plan = pruned.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") || pruned.rdd.getNumPartitions <= loaded.postings.rdd.getNumPartitions)
     assert(pruned.select("head_id").distinct().as[Long].collect().toSet === Set(30L, 60L))
   }
 
-  test("loaded-index search prunes posting partitions dynamically (S6/Q5)") {
-    // the no-collect form of selective posting reads: stage-2 joins on the
-    // head_bucket partition column, so Catalyst inserts a dynamic-pruning
-    // subquery fed by the broadcast stage-1 candidates
+  test("loaded-index search prunes posting partitions (S6/Q5)") {
+    // selective posting reads: stage-2 collects the stage-1 candidates, so
+    // the posting scan carries a STATIC head_bucket IN (…) partition filter
+    // naming only the candidates' buckets
+    def staticBucketFilter(plan: String): Boolean =
+      "PartitionFilters: \\[([^\\]]*)\\]".r.findAllMatchIn(plan).map(_.group(1))
+        .exists(f => f.contains("head_bucket") && !f.toLowerCase.contains("dynamicpruning") &&
+          (f.contains(" IN (") || f.contains(" INSET ")))
     val dir = tmp()
     val corpus = synthVectors(300).select("id", "vec")
     val idx = AnnIndex(spark, corpus,
@@ -248,8 +253,8 @@ class SourcesSpec extends SparkSpec {
       .toDF("query_id", "qvec").where(col("query_id") >= 0)
     val res = loaded.search(q, 3)
     val plan = res.queryExecution.executedPlan.toString
-    assert(plan.toLowerCase.contains("dynamicpruning"),
-      s"no dynamic partition pruning in loaded-index search plan:\n$plan")
+    assert(staticBucketFilter(plan),
+      s"no static head_bucket partition filter in loaded-index search plan:\n$plan")
     // and pruning must not change results vs the in-memory index
     assert(res.orderBy("query_id", "rank").collect().toSeq ===
       idx.search(q, 3).orderBy("query_id", "rank").collect().toSeq)
@@ -258,10 +263,20 @@ class SourcesSpec extends SparkSpec {
     // — and never re-quantizes (no codes-table join in the plan either)
     val adc = loaded.searchAdc(q, 3)
     val adcPlan = adc.queryExecution.executedPlan.toString
-    assert(adcPlan.toLowerCase.contains("dynamicpruning"),
-      s"no dynamic partition pruning in loaded-index ADC plan:\n$adcPlan")
+    assert(staticBucketFilter(adcPlan),
+      s"no static head_bucket partition filter in loaded-index ADC plan:\n$adcPlan")
     assert(adc.orderBy("query_id", "rank").collect().toSeq ===
       idx.searchAdc(q, 3).orderBy("query_id", "rank").collect().toSeq)
+    // bucketed AND filtered: the semi-join runs over the pruned scan
+    val pass = col("id") % 3 =!= 0
+    val filtered = loaded.searchFiltered(q, 3, pass)
+    val filteredPlan = filtered.queryExecution.executedPlan.toString
+    assert(staticBucketFilter(filteredPlan),
+      s"no static head_bucket partition filter in loaded-index filtered plan:\n$filteredPlan")
+    val filteredRows = filtered.orderBy("query_id", "rank").collect().toSeq
+    assert(filteredRows.nonEmpty && filteredRows.forall(_.getLong(2) % 3 != 0))
+    assert(filteredRows ===
+      idx.searchFiltered(q, 3, pass).orderBy("query_id", "rank").collect().toSeq)
   }
 
   test("query parser extracts options, vector, base64 (S7)") {

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Eval, Knn, Spann}
+import graft.sources.IndexStore
 
 /** End-to-end SPANN pipeline on real testdata (mirrors
   * `Test/src/SSDServingTest.cpp:411-777`: SelectHead → Build → Search with
@@ -45,24 +46,43 @@ class SpannSpec extends SparkSpec {
     // probes each of the hashed corpus's 12 heads from a few of the 7 queries,
     // so the interleaved stage-2 kernel sees routed slices of every length
     // mod 4 (four-query blocks plus a one-at-a-time tail)
-    val inputs = Seq((corpus, queries, 8, 24, 10), (hc, hq, 8, 24, 10)) ++
+    val widened = Seq((corpus, queries, 8, 24, 10), (hc, hq, 8, 24, 10))
+    val plain = widened ++
       Seq(1, 3, 5).map(ik => (hc, hq, ik, 0, 10)) :+ ((withNaN, hq, 5, 0, 700))
+    // + (headBuckets, filtered): IndexStore-bucketed postings searched with
+    // their bucket count, and an id filter, each alone and together
+    val inputs = plain.map((_, Option.empty[Int], false)) ++
+      widened.flatMap(i => Seq((i, Some(8), false), (i, None, true), (i, Some(8), true)))
     val sliceLens = scala.collection.mutable.Set.empty[Long]
-    for ((corpus, queries, internalK, wideK, k) <- inputs;
+    for (((corpus, queries, internalK, wideK, k), headBuckets, filtered) <- inputs;
          metric <- Seq("l2sq", "cos", "dot", "ip")) {
       val heads = Spann.selectHeadsModulo(corpus, 50)
-      val postings = Spann.buildPostings(corpus, heads, 4, metric = metric).cache()
+      val built = Spann.buildPostings(corpus, heads, 4, metric = metric)
+      val postings = headBuckets.fold(built)(IndexStore.withBucket(built, _)).cache()
+      val pass =
+        if (filtered) Some(corpus.where(col("id") % 3 =!= 0).select(col("id"))) else None
       // NaN ≠ NaN: compare a NaN distance as None
       def key(r: org.apache.spark.sql.Row) =
         (r.getLong(0), r.getInt(1), r.getLong(2), Some(r.getDouble(3)).filterNot(_.isNaN))
       val fused = Spann.searchTwoStage(queries, heads, postings, k, internalK,
-        metric = metric, wideK = wideK, closeRatio = 1.08)
+        metric = metric, headBuckets = headBuckets, wideK = wideK, closeRatio = 1.08,
+        idFilter = pass)
         .collect().map(key).toSet
       // the former formulation, verbatim
-      val cand = Spann.candidateHeads(queries, heads, internalK, metric = metric,
+      val cand0 = Spann.candidateHeads(queries, heads, internalK, metric = metric,
         wideK = wideK, closeRatio = 1.08)
-      sliceLens ++= cand.groupBy("head_id").count().collect().map(_.getLong(1))
-      val hits = cand.join(postings, Seq("head_id"))
+      sliceLens ++= cand0.groupBy("head_id").count().collect().map(_.getLong(1))
+      val cand = headBuckets match {
+        case Some(b) => cand0.withColumn("head_bucket", (col("head_id") % b).cast("int"))
+        case None => cand0
+      }
+      val joinKeys = if (headBuckets.isDefined) Seq("head_bucket", "head_id") else Seq("head_id")
+      val probed = cand.join(postings, joinKeys)
+      val kept = pass match {
+        case Some(f) => probed.join(f.select(col("id")), Seq("id"), "left_semi")
+        case None => probed
+      }
+      val hits = kept
         .join(org.apache.spark.sql.functions.broadcast(queries), Seq("query_id"))
         .withColumn("pdist",
           graft.functions.dist.byName(metric)(col("qvec"), col("vec")))
@@ -70,7 +90,8 @@ class SpannSpec extends SparkSpec {
         hits.groupBy(col("query_id"))
           .agg(TopKByDistance.topkDistinct(col("id"), col("pdist"), k).as("nn")))
         .collect().map(key).toSet
-      assert(fused === ref, s"metric $metric internalK $internalK k $k")
+      assert(fused.nonEmpty && fused === ref,
+        s"metric $metric internalK $internalK k $k buckets $headBuckets filtered $filtered")
       if (k > 10) assert(fused.exists(_._4.isEmpty), s"NaN row dropped, metric $metric")
       postings.unpersist()
     }
@@ -85,30 +106,48 @@ class SpannSpec extends SparkSpec {
       k = 16, maxIter = 2)
     val ident = Array.tabulate(6, 6)((i, j) => if (i == j) 1.0 else 0.0)
     val rcb = PQ.RotatedCodebooks(ident, cb)
-    val coded = postings.select(col("head_id"), col("id"))
+    val coded0 = postings.select(col("head_id"), col("id"))
       .join(PQ.quantize(corpus.select(col("id"), col("vec")), cb)
         .select(col("id"), col("codes")), Seq("id"))
-    val fused = Spann.searchTwoStageAdc(queries, heads, coded, rcb, 10, 8)
-      .collect().map(r =>
-        (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
-    // the former join formulation, verbatim
+    val pass = corpus.where(col("meta") =!= "AF").select(col("id"))
+    // the former join formulation's query side, verbatim
     val bc = spark.sparkContext.broadcast(rcb)
     val lutUdf = udf((q: Seq[Double]) => bc.value.cb.adcLut(
       scala.collection.immutable.ArraySeq.unsafeWrapArray(bc.value.rotate(q))))
     val withLut = queries
       .withColumn("_lut", lutUdf(col("qvec").cast("array<double>")))
       .select(col("query_id"), col("_lut"))
-    val cand = Spann.candidateHeads(queries, heads, 8)
-    val hits = cand.join(coded, Seq("head_id"))
-      .join(org.apache.spark.sql.functions.broadcast(withLut), Seq("query_id"))
-      .withColumn("pdist",
-        graft.functions.LutCodesDistExpr(col("_lut"), col("codes")))
-    val ref = Knn.explodeRanked(
-      hits.groupBy(col("query_id"))
-        .agg(TopKByDistance.topkDistinct(col("id"), col("pdist"), 10).as("nn")))
-      .collect().map(r =>
-        (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
-    assert(fused === ref)
+    val cand0 = Spann.candidateHeads(queries, heads, 8)
+    // plain, IndexStore-bucketed, id-filtered, and both
+    for (headBuckets <- Seq(None, Some(8)); idFilter <- Seq(None, Some(pass))) {
+      val coded = headBuckets.fold(coded0)(IndexStore.withBucket(coded0, _))
+      val fused = Spann.searchTwoStageAdc(queries, heads, coded, rcb, 10, 8,
+        headBuckets = headBuckets, idFilter = idFilter)
+        .collect().map(r =>
+          (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
+      // the former join formulation, verbatim
+      val cand = headBuckets match {
+        case Some(b) => cand0.withColumn("head_bucket", (col("head_id") % b).cast("int"))
+        case None => cand0
+      }
+      val joinKeys = if (headBuckets.isDefined) Seq("head_bucket", "head_id") else Seq("head_id")
+      val probed = cand.join(coded, joinKeys)
+      val kept = idFilter match {
+        case Some(f) => probed.join(f.select(col("id")), Seq("id"), "left_semi")
+        case None => probed
+      }
+      val hits = kept
+        .join(org.apache.spark.sql.functions.broadcast(withLut), Seq("query_id"))
+        .withColumn("pdist",
+          graft.functions.LutCodesDistExpr(col("_lut"), col("codes")))
+      val ref = Knn.explodeRanked(
+        hits.groupBy(col("query_id"))
+          .agg(TopKByDistance.topkDistinct(col("id"), col("pdist"), 10).as("nn")))
+        .collect().map(r =>
+          (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
+      assert(fused.nonEmpty && fused === ref,
+        s"buckets $headBuckets filtered ${idFilter.isDefined}")
+    }
   }
 
   test("a stage-1 candidate naming a query outside the batch fails loudly") {
