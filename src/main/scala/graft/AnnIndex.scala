@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.NearestHeadsExpr
+import graft.functions.{MultiTopK, NearestHeadsExpr}
 import graft.operators.{Eval, Knn, Mutations, Spann}
 import graft.sources.IndexStore
 
@@ -22,12 +22,23 @@ import graft.sources.IndexStore
   * extended on `add`). The head table is RESIDENT, as the reference keeps
   * its head index in memory: wherever an index comes into being (`build`,
   * [[AnnIndex.load]], `rebalance`, and `refineIndex` through `build`) it is
-  * collected once into a driver-local relation, with its row count as the
-  * head-count hint. Posting assignment, the hier routing state, `add` and
-  * every search then read it with no Spark job and no corpus scan. A head
-  * set over the [[graft.functions.NearestHeadsExpr.collectBounded]] budget
+  * collected once into a driver-local relation and widened head rows, with
+  * its row count as the head-count hint. Posting assignment, the hier
+  * routing state and `add` read the relation with no Spark job and no
+  * corpus scan. A flat search runs stage-1 on the driver over the widened
+  * rows, on every core, and hands its candidates and the one collected
+  * query batch straight to stage-2 — one Spark job per search, as the
+  * reference searches its in-memory head index per query. A head set over
+  * the [[graft.functions.NearestHeadsExpr.collectBounded]] budget
   * ([[Spann.MaxBroadcastHeads]] rows) stays the lazy frame, searched
   * through the join/hier routes.
+  *
+  * Postings built here (`build`, `rebalance`) are clustered by id
+  * ([[AnnIndex.byId]]): a vector's replicas sit side by side, and the
+  * stage-2 router scores each (query, id) pair once instead of once per
+  * replica (the reference drops repeated ids before scoring, `m_deduper`).
+  * A loaded index keeps IndexStore's bucket layout; the file format is
+  * unchanged.
   */
 class AnnIndex private (
     val spark: SparkSession,
@@ -38,7 +49,8 @@ class AnnIndex private (
     val postings: Option[DataFrame],
     val quantizer: Option[graft.functions.PQ.RotatedCodebooks] = None,
     private val headCountHint: Option[Long] = None,
-    private val storedCodes: Option[DataFrame] = None) {
+    private val storedCodes: Option[DataFrame] = None,
+    private val headRows: Option[AnnIndex.HeadRows] = None) {
 
   private def copy(
       vectors: DataFrame = vectors,
@@ -47,13 +59,14 @@ class AnnIndex private (
       postings: Option[DataFrame] = postings,
       quantizer: Option[graft.functions.PQ.RotatedCodebooks] = quantizer,
       headCountHint: Option[Long] = headCountHint,
-      storedCodes: Option[DataFrame] = storedCodes): AnnIndex =
+      storedCodes: Option[DataFrame] = storedCodes,
+      headRows: Option[AnnIndex.HeadRows] = headRows): AnnIndex =
     new AnnIndex(spark, conf, vectors, deleted, heads, postings, quantizer,
-      headCountHint, storedCodes)
+      headCountHint, storedCodes, headRows)
 
   def setParameter(name: String, value: String): AnnIndex =
     new AnnIndex(spark, conf.set(name, value), vectors, deleted, heads, postings,
-      quantizer, headCountHint, storedCodes)
+      quantizer, headCountHint, storedCodes, headRows)
   def getParameter(name: String): String = conf.get(name)
 
   def count: Long = Mutations.liveView(vectors, deleted).count()
@@ -100,7 +113,7 @@ class AnnIndex private (
     // instance (the count also into save's config), so neither this build's
     // routing decision and posting assignment nor any later search re-reads
     // the corpus for its heads
-    val (heads, hn) = AnnIndex.resident(spark, h)
+    val (heads, hn, rows) = AnnIndex.resident(spark, h)
     val raw = hierOver(heads, hn) match {
       case Some((sh, routing)) =>
         // routed expression form (falls back to the hier join automatically
@@ -114,8 +127,8 @@ class AnnIndex private (
     // eager checkpoint: materialize under this plan's own execution (a lazy
     // one would compute inside a later search and log unregistered-accumulator
     // errors from DAGScheduler)
-    copy(heads = Some(heads), postings = Some(p.localCheckpoint(true)),
-      headCountHint = Some(hn))
+    copy(heads = Some(heads), postings = Some(AnnIndex.byId(p).localCheckpoint(true)),
+      headCountHint = Some(hn), headRows = rows)
   }
 
   private def requireBuilt(): (DataFrame, DataFrame) =
@@ -147,20 +160,51 @@ class AnnIndex private (
       else Some((sh, Spann.routeHeads(h, sh, conf.routeReplicas, conf.metric)))
     }
 
-  /** Stage-1 candidates `(query_id, head_id)` of a query batch: routed
-    * through super-heads past `conf.hierThreshold` (never a full-head
-    * broadcast; `superK` is that route's recall knob), else the flat scan
-    * of the resident heads with the MaxDistRatio prune and the
-    * WideK/CloseRatio widening (dense-region queries probe extra
-    * close-ranked heads).
+  /** The stage-1 kernel over the resident head rows, r = the flat probe
+    * width. Built at most once per instance (its conf fixes metric and r).
     */
-  private def candidates(queries: DataFrame, h: DataFrame): DataFrame =
-    hierState match {
-      case Some((sh, routing)) =>
-        Spann.candidateHeadsHier(queries, sh, routing, conf.internalK, conf.superK, conf.metric)
-      case None =>
-        Spann.candidateHeads(queries, h, conf.internalK, conf.maxDistRatio, conf.metric,
-          conf.wideK, conf.closeRatio)
+  private lazy val headScan: Option[NearestHeadsExpr] = headRows.map { case (ids, vecs) =>
+    NearestHeadsExpr.kernel(ids, vecs, math.max(conf.internalK, conf.wideK), conf.metric)
+  }
+
+  /** Stage-1 candidates `(query_id, head_id)` of a query batch (`q` is its
+    * collected form): routed through super-heads past `conf.hierThreshold`
+    * (never a full-head broadcast; `superK` is that route's recall knob),
+    * else the flat scan of the heads with the MaxDistRatio prune and the
+    * WideK/CloseRatio widening (dense-region queries probe extra
+    * close-ranked heads) — on the driver over the resident head rows
+    * ([[Spann.candidatePairs]]), through [[Spann.candidateHeads]] when the
+    * head table stayed a lazy frame.
+    */
+  private def candidates(queries: DataFrame, q: MultiTopK.Queries): Array[(Long, Long)] =
+    (hierState, headScan) match {
+      case (Some((sh, routing)), _) => Spann.collectPairs(
+        Spann.candidateHeadsHier(queries, sh, routing, conf.internalK, conf.superK, conf.metric))
+      case (None, Some(scan)) =>
+        Spann.candidatePairs(q, scan, conf.internalK, conf.maxDistRatio, conf.wideK,
+          conf.closeRatio)
+      case (None, None) => Spann.collectPairs(
+        Spann.candidateHeads(queries, heads.get, conf.internalK, conf.maxDistRatio,
+          conf.metric, conf.wideK, conf.closeRatio))
+    }
+
+  /** A two-stage search of `queries`: the batch is collected once, within
+    * `maxRows` rows and `maxBytes` vector bytes
+    * ([[MultiTopK.collectQueriesBounded]]), and its stage-1 candidates and
+    * the collected batch go to `stage2`. An over-budget batch splits into
+    * chunks by `query_id` hash, each searched the same way (and split again
+    * if still over), and the results union.
+    */
+  private def probe(queries: DataFrame, maxRows: Int = MultiTopK.MaxQueryRows,
+      maxBytes: Long = MultiTopK.MaxQueryBytes, salt: Int = 0)(
+      stage2: (Array[(Long, Long)], MultiTopK.Queries) => DataFrame): DataFrame =
+    MultiTopK.collectQueriesBounded(queries, maxRows, maxBytes) match {
+      case Right(q) => stage2(candidates(queries, q), q)
+      case Left(n) =>
+        (0 until n).map { c =>
+          probe(queries.where(pmod(xxhash64(col("query_id"), lit(salt)), lit(n)) === c),
+            maxRows, maxBytes, salt + 1)(stage2)
+        }.reduce(_ unionByName _)
     }
 
   /** A posting frame with the tombstoned ids removed. */
@@ -171,10 +215,15 @@ class AnnIndex private (
     * index keeps IndexStore's `head_bucket` partition column, so stage-2
     * reads only the candidates' posting buckets.
     */
-  def search(queries: DataFrame, k: Int): DataFrame = {
-    val (h, p) = requireBuilt()
-    Spann.searchFromCandidates(candidates(queries, h), queries, live(p), k, conf.metric,
-      Some(conf.headBuckets))
+  def search(queries: DataFrame, k: Int): DataFrame =
+    searchWithin(queries, k, MultiTopK.MaxQueryRows, MultiTopK.MaxQueryBytes)
+
+  /** [[search]] under an explicit query-collect budget (see [[probe]]). */
+  private[graft] def searchWithin(queries: DataFrame, k: Int, maxRows: Int,
+      maxBytes: Long): DataFrame = {
+    val p = live(requireBuilt()._2)
+    probe(queries, maxRows, maxBytes)(
+      Spann.searchPairs(_, _, p, k, conf.metric, Some(conf.headBuckets), None))
   }
 
   /** Filtered SPANN search — Q4 on the approximate path (the reference
@@ -189,10 +238,10 @@ class AnnIndex private (
     * heads contain — widen `InternalK`/`WideK` for such workloads.
     */
   def searchFiltered(queries: DataFrame, k: Int, predicate: Column): DataFrame = {
-    val (h, p) = requireBuilt()
+    val p = live(requireBuilt()._2)
     val keep = Mutations.liveView(vectors, deleted).where(predicate).select(col("id"))
-    Spann.searchFromCandidates(candidates(queries, h), queries, live(p), k, conf.metric,
-      Some(conf.headBuckets), Some(keep))
+    probe(queries)(
+      Spann.searchPairs(_, _, p, k, conf.metric, Some(conf.headBuckets), Some(keep)))
   }
 
   /** Exact search — the truth path (brute force, always available). */
@@ -293,9 +342,8 @@ class AnnIndex private (
     import graft.functions.PQ
     val q = quantizer.getOrElse(sys.error("no quantizer — call trainQuantizer() first"))
     (heads, codedPostings) match {
-      case (Some(h), Some(cp)) =>
-        Spann.adcFromCandidates(candidates(queries, h), queries, live(cp), q, k,
-          Some(conf.headBuckets))
+      case (Some(_), Some(cp)) =>
+        probe(queries)(Spann.adcPairs(_, _, live(cp), q, k, Some(conf.headBuckets), None))
       case _ => PQ.adcSearchOpq(queries, live(codesTable.get), q, k)
     }
   }
@@ -412,9 +460,9 @@ class AnnIndex private (
     val p2 =
       if (p.columns.contains("codes")) p2bucketed.join(storedCodes.get, Seq("id"))
       else p2bucketed
-    val (heads, hn) = AnnIndex.resident(spark, h2.localCheckpoint(true))
-    copy(heads = Some(heads), postings = Some(p2.localCheckpoint(true)),
-      headCountHint = Some(hn))
+    val (heads, hn, rows) = AnnIndex.resident(spark, h2.localCheckpoint(true))
+    copy(heads = Some(heads), postings = Some(AnnIndex.byId(p2).localCheckpoint(true)),
+      headCountHint = Some(hn), headRows = rows)
   }
 
   /** Recall@k of the approximate path vs exact, on given queries. */
@@ -466,20 +514,33 @@ object AnnIndex {
     if (vectors.columns.contains("meta")) vectors
     else vectors.withColumn("meta", lit(null).cast("string"))
 
+  /** Resident head rows: ids and vectors widened to double. */
+  private[graft] type HeadRows = (Array[Long], Array[Array[Double]])
+
   /** The head table `(head_id, head_vec)` collected ONCE under the
     * [[NearestHeadsExpr.collectBounded]] budget into a driver-local relation
-    * (whose stage-1 collect runs no job), or `heads` itself when over the
-    * `maxRows` budget; with the head count either way.
+    * (whose stage-1 collect runs no job) and the widened rows the driver
+    * stage-1 scans, or `heads` itself and no rows when over the `maxRows`
+    * budget; with the head count either way.
     */
   private[graft] def resident(spark: SparkSession, heads: DataFrame,
-      maxRows: Int = Spann.MaxBroadcastHeads): (DataFrame, Long) = {
+      maxRows: Int = Spann.MaxBroadcastHeads): (DataFrame, Long, Option[HeadRows]) = {
     val sel = heads.select("head_id", "head_vec")
     NearestHeadsExpr.collectBounded(sel, maxRows) match {
       case (n, Some(rows)) =>
-        (spark.createDataFrame(java.util.Arrays.asList(rows: _*), sel.schema), n)
-      case (n, None) => (heads, n)
+        (spark.createDataFrame(java.util.Arrays.asList(rows: _*), sel.schema), n,
+          Some(NearestHeadsExpr.widen(rows)))
+      case (n, None) => (heads, n, None)
     }
   }
+
+  /** Posting rows clustered by id: hash-partitioned on `id` and sorted by it
+    * within each partition, so a vector's replicas sit next to each other
+    * and the stage-2 router scores each (query, id) pair once
+    * ([[MultiTopK.Probe]]). Rows spread by id hash, not head hash.
+    */
+  private[graft] def byId(postings: DataFrame): DataFrame =
+    postings.repartition(col("id")).sortWithinPartitions(col("id"))
 
   /** Create over a vector table `(id, vec[, meta])`. */
   def apply(spark: SparkSession, vectors: DataFrame, conf: GraftConf = GraftConf()): AnnIndex =
@@ -493,13 +554,14 @@ object AnnIndex {
       replicaCount = l.config.replicaCount,
       headBuckets = l.config.headBuckets)
     val vectors = spark.read.parquet(s"$dir/vectors")
-    val (heads, hn) = resident(spark, l.heads)
+    val (heads, hn, rows) = resident(spark, l.heads)
     new AnnIndex(spark, conf, vectors,
       l.deletes.getOrElse(emptyDeletes(spark)),
       Some(heads), Some(l.postings), // head_bucket kept → pruned stage-2 scans
       l.quantizer,
       headCountHint = Some(hn),
-      storedCodes = l.codes)
+      storedCodes = l.codes,
+      headRows = rows)
   }
 
   /** Restore from a [[AnnIndex#saveToFile]] single-file archive. Extracts

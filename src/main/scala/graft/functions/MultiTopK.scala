@@ -6,10 +6,13 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.{col, explode}
+import org.apache.spark.sql.functions.{col, count, explode, lit, size, sum}
 import org.apache.spark.sql.graft.ColumnShim
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.array.ByteArrayMethods
 
 import MultiTopK._
 
@@ -75,6 +78,8 @@ case class MultiTopK(
     case _                       => false
   }
   @transient private lazy val allIdx: Array[Int] = Array.range(0, qids.length)
+  // per-task scratch (tasks deserialize their own aggregate copy)
+  @transient private lazy val probeRun = new ProbeRun(qids.length)
 
   override def createAggregationBuffer(): Array[TopKBuffer] =
     router.newBuffers(qids.length)
@@ -95,7 +100,13 @@ case class MultiTopK(
       case r: Probe =>
         val s = r.slot(children.last.eval(input))
         if (s < 0) return bufs
-        idx = r.idx; from = r.offsets(s); to = r.offsets(s + 1)
+        // only the head's queries this row's run has not offered yet; none
+        // left → skip the row before its vector is widened
+        val run = probeRun
+        run.advance(bufs, rowId, if (scorer.arity == 1) children(1).eval(input) else null)
+        to = run.fresh(r.idx, r.offsets(s), r.offsets(s + 1))
+        if (to == 0) return bufs
+        idx = run.rest; from = 0
       case r: Labeled =>
         val kV = children.last.eval(input)
         if (kV == null) return bufs
@@ -311,6 +322,15 @@ object MultiTopK {
   /** SPANN stage-2: a posting row feeds the queries whose stage-1 candidates
     * name its head; distinct-id buffers dedup the posting replicas exactly as
     * the join form's `topkDistinct`.
+    *
+    * Each (query, id) pair is scored once per run of rows ([[ProbeRun]]): a
+    * row is offered only to those of its head's queries that no earlier row
+    * of the run was offered to. A skipped pair would have produced the same
+    * double, which the distinct-id buffer drops (the id is in it already, or
+    * the buffer's worst is better and only gets better), so results are
+    * bit-identical in any row order; rows clustered by id (`AnnIndex`'s
+    * posting layout) make the runs span a vector's replicas, where SPTAG's
+    * search drops repeated ids before scoring them (`m_deduper`).
     */
   final case class Probe(k: Int, keys: Array[Long], offsets: Array[Int], idx: Array[Int])
       extends Keyed {
@@ -367,10 +387,76 @@ object MultiTopK {
     (keys, idx.scanLeft(0)(_ + _.length), idx.flatten)
   }
 
+  /** Per-task scratch of the [[Probe]] router. A run is a sequence of rows
+    * of one id whose score column (`vec`, or `codes` under [[Lut]]) carries
+    * the same bytes: the rows of a run score the same double against any one
+    * query, so a query needs only one of them. Keying on the bytes, not the
+    * id alone, matters: a plain-union `add` can give one id two vectors, and
+    * the distinct-id buffer keeps the smaller of their distances. A run
+    * belongs to one set of buffers; rows with no byte view (a null or
+    * generic array, or a two-column scorer) never continue one.
+    */
+  private final class ProbeRun(nq: Int) {
+    private var bufs: Array[TopKBuffer] = null
+    private var id = 0L
+    private var bytes = new Array[Byte](0)
+    private var len = -1 // -1: nothing to continue
+    // a query was offered in the current run iff offered(qi) == stamp
+    private val offered = new Array[Int](nq)
+    private var stamp = 0
+    /** The row's not-yet-offered queries, filled by [[fresh]]. */
+    val rest = new Array[Int](nq)
+
+    /** Continue the current run when (b, rowId, score) match it, else start one. */
+    def advance(b: Array[TopKBuffer], rowId: Long, score: Any): Unit = {
+      val same = (b eq bufs) && rowId == id && len >= 0 && (score match {
+        case u: UnsafeArrayData => u.getSizeInBytes == len && ByteArrayMethods.arrayEquals(
+          u.getBaseObject, u.getBaseOffset, bytes, Platform.BYTE_ARRAY_OFFSET, len)
+        case _ => false
+      })
+      if (!same) {
+        bufs = b; id = rowId
+        score match {
+          case u: UnsafeArrayData =>
+            len = u.getSizeInBytes
+            if (bytes.length < len) bytes = new Array[Byte](len)
+            Platform.copyMemory(u.getBaseObject, u.getBaseOffset, bytes,
+              Platform.BYTE_ARRAY_OFFSET, len)
+          case _ => len = -1
+        }
+        if (stamp == Int.MaxValue) { java.util.Arrays.fill(offered, 0); stamp = 0 }
+        stamp += 1
+      }
+    }
+
+    /** Copy the queries of `idx[from, to)` not offered in this run into
+      * [[rest]], marking them offered; returns how many there are.
+      */
+    def fresh(idx: Array[Int], from: Int, to: Int): Int = {
+      var n = 0
+      var p = from
+      while (p < to) {
+        val qi = idx(p)
+        if (offered(qi) != stamp) { offered(qi) = stamp; rest(n) = qi; n += 1 }
+        p += 1
+      }
+      n
+    }
+  }
+
   /** A collected query batch sorted by id: vectors widened to double (exact),
     * labels null unless asked for.
     */
   final case class Queries(ids: Array[Long], vecs: Array[Array[Double]], labels: Array[Long])
+
+  /** The driver budget of one collected `(query_id, qvec)` batch
+    * ([[collectQueriesBounded]]): rows, and bytes of widened vectors. The
+    * batch feeds both SPANN stages, so it also bounds the stage-2 candidate
+    * pairs (at most |Q|·max(internalK, wideK)) and the probe index every
+    * stage-2 task carries.
+    */
+  private[graft] val MaxQueryRows: Int = 1 << 16
+  private[graft] val MaxQueryBytes: Long = 128L << 20
 
   /** Collect a (broadcastable-by-contract) query frame `(id, vec[, label])`.
     * A query id may appear once: a duplicate would otherwise surface as two
@@ -380,23 +466,51 @@ object MultiTopK {
       queries: DataFrame,
       id: String = "query_id",
       vec: String = "qvec",
-      label: Option[String] = None): Queries = {
-    val rows = queries.select((Seq(id, vec) ++ label).map(col): _*).collect()
-      .map { r =>
-        val qid = r.get(0) match {
-          case l: java.lang.Long    => l.longValue
-          case i: java.lang.Integer => i.longValue
-          case other                => other.toString.toLong
-        }
-        val v = r.getSeq[Any](1).map(_.asInstanceOf[Number].doubleValue).toArray
-        (qid, v, if (label.isEmpty) 0L else r.get(2).asInstanceOf[Number].longValue)
-      }.sortBy(_._1)
+      label: Option[String] = None): Queries =
+    toQueries(queries.select((Seq(id, vec) ++ label).map(col): _*).collect(), id,
+      label.isDefined)
+
+  /** [[collectQueries]] of a `(query_id, qvec)` batch within `maxRows` rows
+    * and `maxBytes` bytes of widened vectors, under the
+    * [[NearestHeadsExpr.collectBounded]] discipline: a frame whose size
+    * estimate is driver-safe is collected and checked after; an
+    * estimate-heavy one is measured first (one job for its rows and vector
+    * bytes) and collected only within budget. `Right(batch)` when it fits
+    * (a one-row batch always does: it cannot split), else `Left(n)`: the
+    * number of chunks (≥ 2) that would each fit if the split were even.
+    */
+  private[graft] def collectQueriesBounded(queries: DataFrame, maxRows: Int, maxBytes: Long)
+      : Either[Int, Queries] = {
+    val sel = queries.select(col("query_id"), col("qvec"))
+    lazy val rows = sel.collect()
+    val (n, bytes) =
+      if (sel.queryExecution.optimizedPlan.stats.sizeInBytes <= NearestHeadsExpr.SafeCollectBytes)
+        (rows.length.toLong, rows.map(r => 8L + 8L * r.getSeq[Any](1).length).sum)
+      else {
+        val m = sel.agg(count(lit(1)), sum(lit(8L) + lit(8L) * size(col("qvec")))).head()
+        (m.getLong(0), if (m.isNullAt(1)) 0L else m.getLong(1))
+      }
+    if (n <= 1 || (n <= maxRows && bytes <= maxBytes)) Right(toQueries(rows, "query_id", false))
+    else Left(math.max(2L, math.max((n - 1) / maxRows, (bytes - 1) / maxBytes) + 1).toInt)
+  }
+
+  private def toQueries(collected: Array[org.apache.spark.sql.Row], id: String,
+      labeled: Boolean): Queries = {
+    val rows = collected.map { r =>
+      val qid = r.get(0) match {
+        case l: java.lang.Long    => l.longValue
+        case i: java.lang.Integer => i.longValue
+        case other                => other.toString.toLong
+      }
+      val v = r.getSeq[Any](1).map(_.asInstanceOf[Number].doubleValue).toArray
+      (qid, v, if (labeled) r.get(2).asInstanceOf[Number].longValue else 0L)
+    }.sortBy(_._1)
     val ids = rows.map(_._1)
     ids.indices.drop(1).find(i => ids(i) == ids(i - 1)).foreach { i =>
       throw new IllegalArgumentException(
         s"duplicate $id ${ids(i)} in the query batch: query ids must be unique")
     }
-    Queries(ids, rows.map(_._2), if (label.isEmpty) null else rows.map(_._3))
+    Queries(ids, rows.map(_._2), if (labeled) rows.map(_._3) else null)
   }
 
   /** ONE scan of `corpus` through the aggregate → one row per query:

@@ -108,6 +108,23 @@ case class NearestHeadsExpr(
     }
     val buf = scratchBuf
     buf.reset()
+    scan(q, n, buf)
+    new GenericArrayData(buf.sorted.map { case (id, d) => InternalRow(id, d) })
+  }
+
+  /** The row kernel for a driver-side batch, safe to call from many threads
+    * at once (evalArray's scratch belongs to one task): the same scans, into
+    * a buffer of this call's own. Returns the `r` nearest heads of `q` as
+    * (head id, dist), ascending (dist, id) — evalArray's output.
+    */
+  private[graft] def nearest(q: Array[Double]): Array[(Long, Double)] = {
+    val buf = new TopKBuffer(r)
+    scan(q, q.length, buf)
+    buf.sorted
+  }
+
+  /** The first `n` components of `q` against every head, into `buf`. */
+  private def scan(q: Array[Double], n: Int, buf: TopKBuffer): Unit =
     if (uniformDim && n >= dim) {
       if (metricTag == DistKernel.L2)
         DistKernel.scanFlatNormPruned(
@@ -117,8 +134,6 @@ case class NearestHeadsExpr(
     } else {
       scanRagged(q, n, buf)
     }
-    new GenericArrayData(buf.sorted.map { case (id, d) => InternalRow(id, d) })
-  }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, a => {
@@ -383,14 +398,27 @@ object NearestHeadsExpr {
 
   private def fromRows(rows: Array[org.apache.spark.sql.Row], vec: Column,
       r: Int, metric: String): Column = {
-    val ids = rows.map(_.getLong(0))
-    // widen float heads to double (exact) so one internal representation
-    // serves both float- and double-typed head tables
-    val vecs = rows.map(_.getSeq[Any](1).map {
-      case f: java.lang.Float => f.toDouble
-      case d: java.lang.Double => d.doubleValue
-    }.toArray)
+    val (ids, vecs) = widen(rows)
     ColumnShim.column(
       NearestHeadsExpr(ColumnShim.expression(vec), ids, vecs, r, metric))
   }
+
+  /** Collected `(head_id, head_vec)` rows as ids and vectors, float heads
+    * widened to double (exact) so one internal representation serves both
+    * float- and double-typed head tables.
+    */
+  private[graft] def widen(rows: Array[org.apache.spark.sql.Row])
+      : (Array[Long], Array[Array[Double]]) =
+    (rows.map(_.getLong(0)), rows.map(_.getSeq[Any](1).map {
+      case f: java.lang.Float => f.toDouble
+      case d: java.lang.Double => d.doubleValue
+    }.toArray))
+
+  /** The kernel over widened heads for [[NearestHeadsExpr.nearest]]: a
+    * `qvec`-keyed expression, the one `fromHeads` builds for a stage-1 scan.
+    */
+  private[graft] def kernel(ids: Array[Long], vecs: Array[Array[Double]], r: Int,
+      metric: String): NearestHeadsExpr =
+    NearestHeadsExpr(ColumnShim.expression(org.apache.spark.sql.functions.col("qvec")),
+      ids, vecs, r, metric)
 }

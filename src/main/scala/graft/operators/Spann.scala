@@ -708,11 +708,21 @@ object Spann {
       k: Int,
       metric: String = "l2sq",
       headBuckets: Option[Int] = None,
-      idFilter: Option[DataFrame] = None): DataFrame = {
-    val q = MultiTopK.collectQueries(queries)
-    stage2(cand, postings, q.ids, MultiTopK.Exact(q.vecs, metric), col("vec"), k,
+      idFilter: Option[DataFrame] = None): DataFrame =
+    searchPairs(collectPairs(cand), MultiTopK.collectQueries(queries), postings, k, metric,
       headBuckets, idFilter)
-  }
+
+  /** [[searchFromCandidates]] from collected candidates and queries. */
+  private[graft] def searchPairs(
+      pairs: Array[(Long, Long)],
+      q: MultiTopK.Queries,
+      postings: DataFrame,
+      k: Int,
+      metric: String,
+      headBuckets: Option[Int],
+      idFilter: Option[DataFrame]): DataFrame =
+    stage2(pairs, q, postings, MultiTopK.Exact(q.vecs, metric), col("vec"), k,
+      headBuckets, idFilter)
 
   /** [[searchFromCandidates]] in the COMPRESSED domain: each probed posting
     * entry (`codedPostings` = `(head_id, id, codes[, head_bucket])`) is
@@ -726,22 +736,42 @@ object Spann {
       rcb: graft.functions.PQ.RotatedCodebooks,
       k: Int,
       headBuckets: Option[Int] = None,
-      idFilter: Option[DataFrame] = None): DataFrame = {
-    import scala.collection.immutable.ArraySeq.unsafeWrapArray
-    val q = MultiTopK.collectQueries(queries)
-    val luts = q.vecs.map(v => rcb.cb.adcLut(unsafeWrapArray(rcb.rotate(unsafeWrapArray(v)))))
-    stage2(cand, codedPostings, q.ids, MultiTopK.Lut(luts), col("codes"), k,
+      idFilter: Option[DataFrame] = None): DataFrame =
+    adcPairs(collectPairs(cand), MultiTopK.collectQueries(queries), codedPostings, rcb, k,
       headBuckets, idFilter)
+
+  /** [[adcFromCandidates]] from collected candidates and queries. */
+  private[graft] def adcPairs(
+      pairs: Array[(Long, Long)],
+      q: MultiTopK.Queries,
+      codedPostings: DataFrame,
+      rcb: graft.functions.PQ.RotatedCodebooks,
+      k: Int,
+      headBuckets: Option[Int],
+      idFilter: Option[DataFrame]): DataFrame = {
+    import scala.collection.immutable.ArraySeq.unsafeWrapArray
+    val luts = q.vecs.map(v => rcb.cb.adcLut(unsafeWrapArray(rcb.rotate(unsafeWrapArray(v)))))
+    stage2(pairs, q, codedPostings, MultiTopK.Lut(luts), col("codes"), k, headBuckets,
+      idFilter)
   }
+
+  /** Stage-1 candidates `(query_id, head_id)` collected to the driver. */
+  private[graft] def collectPairs(cand: DataFrame): Array[(Long, Long)] =
+    cand.select(col("query_id").cast("long"), col("head_id").cast("long"))
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
 
   /** THE stage-2, for every search form (flat or hier stage-1, exact or ADC
     * scoring, in-memory or disk-bucketed postings, with or without an id
-    * filter): the collected stage-1 `(query_id, head_id)` candidates become
-    * the [[MultiTopK.Probe]] router, so ONE aggregate over the posting scan
-    * scores each row (`scorer` over `scoreCol`) against only the queries
-    * that probe its head, and keeps the replica-deduped bounded top-k — no
-    * joined (query, posting) row is ever materialized. Candidates number at
-    * most |Q|·max(internalK, wideK) by construction.
+    * filter): the collected stage-1 `(query_id, head_id)` candidates `pairs`
+    * become the [[MultiTopK.Probe]] router over the collected batch `q`, so
+    * ONE aggregate over the posting scan scores each row (`scorer` over
+    * `scoreCol`) against only the queries that probe its head, and keeps the
+    * replica-deduped bounded top-k — no joined (query, posting) row is ever
+    * materialized. Candidates number at most |Q|·max(internalK, wideK) by
+    * construction. The router scores a (query, id) pair once per run of
+    * same-id, same-vector rows, so postings clustered by id (an in-memory
+    * built index, [[graft.AnnIndex]]) score each replicated vector once per
+    * query; any other row order gives the same result, with fewer skips.
     *
     * Before the aggregate the scan narrows where that buys something: a
     * bucketed posting frame (IndexStore's `head_bucket` partition column)
@@ -754,16 +784,14 @@ object Spann {
     * unfiltered scan: the router already skips unprobed rows.
     */
   private def stage2(
-      cand: DataFrame,
+      pairs: Array[(Long, Long)],
+      q: MultiTopK.Queries,
       postings: DataFrame,
-      qids: Array[Long],
       scorer: MultiTopK.Scorer,
       scoreCol: Column,
       k: Int,
       headBuckets: Option[Int],
       idFilter: Option[DataFrame]): DataFrame = {
-    val pairs = cand.select(col("query_id").cast("long"), col("head_id").cast("long"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
     val heads = pairs.map(_._2).distinct
     val bucketed = headBuckets.filter(_ => postings.columns.contains("head_bucket"))
     val probed = idFilter match {
@@ -772,8 +800,8 @@ object Spann {
           .join(f.select(col("id")), Seq("id"), "left_semi")
       case None => bucketed.fold(postings)(b => postings.where(IndexStore.inBuckets(b, heads)))
     }
-    Knn.explodeRanked(MultiTopK.search(probed, qids, scorer, MultiTopK.Probe(k, pairs, qids),
-      col("id"), scoreCol, col("head_id")))
+    Knn.explodeRanked(MultiTopK.search(probed, q.ids, scorer,
+      MultiTopK.Probe(k, pairs, q.ids), col("id"), scoreCol, col("head_id")))
   }
 
   /** Two-stage SPANN search in the COMPRESSED domain (Q5 + Q11 integrated —
@@ -994,6 +1022,40 @@ object Spann {
       // negative; a query on a head has l2sq best 0): prune only past best > 0
       else widened.where(col("_best") <= 0 || col("hdist") <= lit(maxDistRatio) * col("_best"))
     pruned.drop("_best")
+  }
+
+  /** [[candidateHeads]] of a collected batch over a resident head table, on
+    * the driver: `scan` is the [[graft.functions.NearestHeadsExpr]] that
+    * candidateHeads evaluates per query row (built with r = max(internalK,
+    * wideK)), run through its thread-safe entry point on every core (the
+    * common ForkJoin pool, whose threads are daemons). The WideK/CloseRatio
+    * widening and the `best > 0` MaxDistRatio prune are candidateHeads'
+    * predicates under Spark SQL's double comparison (NaN equals NaN and
+    * sorts above every number), so the pairs are the same set; a query with
+    * no head gets none.
+    */
+  private[graft] def candidatePairs(
+      q: MultiTopK.Queries,
+      scan: graft.functions.NearestHeadsExpr,
+      internalK: Int,
+      maxDistRatio: Double,
+      wideK: Int,
+      closeRatio: Double): Array[(Long, Long)] = {
+    import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
+    def le(a: Double, b: Double): Boolean = compareDoubles(a, b) <= 0
+    val widen = scan.r > internalK
+    val prune = maxDistRatio != Double.MaxValue
+    val per = new Array[Array[(Long, Long)]](q.ids.length)
+    java.util.stream.IntStream.range(0, q.ids.length).parallel().forEach { qi =>
+      val nn = scan.nearest(q.vecs(qi))
+      val best = if (nn.isEmpty) 0.0 else nn(0)._2
+      per(qi) = nn.indices.iterator.filter { i =>
+        val hdist = nn(i)._2
+        (!widen || i < internalK || le(hdist, closeRatio * best)) &&
+          (!prune || le(best, 0.0) || le(hdist, maxDistRatio * best))
+      }.map(i => (q.ids(qi), nn(i)._1)).toArray
+    }
+    per.flatten
   }
 }
 

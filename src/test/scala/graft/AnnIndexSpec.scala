@@ -472,6 +472,45 @@ class AnnIndexSpec extends SparkSpec {
     }
   }
 
+  test("an id carrying two vectors scores both (id-clustered postings)") {
+    import graft.operators.Spann
+    // the grid corpus plus a second vector under id 5, far from the first:
+    // the built postings hold id 5's rows of both vectors side by side
+    val twice = synthVectors(1000)
+      .union(Seq((5L, Seq.fill(10)(900f), "dup")).toDF("id", "vec", "meta"))
+    // every head probed: each query meets both of id 5's vectors
+    val idx = AnnIndex(spark, twice,
+      GraftConf(headRatio = 0.02, replicaCount = 4, internalK = 25))
+      .setParameter("MaxDistRatio", Double.MaxValue.toString).build()
+    val q = Seq((0L, Seq.fill(10)(5f)), (1L, Seq.fill(10)(900f))).toDF("query_id", "qvec")
+    val got = idx.search(q, 3).collect().toSet
+    // the same state, postings in head order: id 5's vectors never adjacent
+    val byHead = idx.postings.get.coalesce(1).sortWithinPartitions("head_id", "dist", "id")
+    val want = Spann.searchTwoStage(q, idx.heads.get, byHead, 3, 25).collect().toSet
+    assert(got === want)
+    for (qid <- Seq(0L, 1L))
+      assert(want.exists(r => r.getLong(0) == qid && r.getInt(1) == 1 && r.getLong(2) == 5L &&
+        r.getDouble(3) == 0.0), s"query $qid did not find id 5 at distance 0")
+  }
+
+  test("an over-budget query batch searches in query_id-hash chunks like one batch") {
+    import graft.functions.MultiTopK
+    val idx = freshIndex.build()
+    val q = synthQueries(9)
+    val heavy = spark.createDataFrame(q.rdd, q.schema) // no size estimate: measured first
+    val one = idx.search(q, 5).collect().toSet
+    assert(one.size === 45)
+    // 9 rows of 8 + 8·10 bytes each
+    for (f <- Seq(q, heavy)) {
+      assert(MultiTopK.collectQueriesBounded(f, 9, 9 * 88L).map(_.ids.length) === Right(9))
+      assert(MultiTopK.collectQueriesBounded(f, 2, Long.MaxValue) === Left(5))
+      assert(MultiTopK.collectQueriesBounded(f, 9, 9 * 88L - 1) === Left(2))
+      // two rows, or three queries' bytes, per collected chunk
+      assert(idx.searchWithin(f, 5, 2, Long.MaxValue).collect().toSet === one)
+      assert(idx.searchWithin(f, 5, Int.MaxValue, 3 * 88L).collect().toSet === one)
+    }
+  }
+
   test("WideK widening flows through search: results are a recall superset") {
     val fixed = freshIndex.setParameter("InternalK", "2").build()
     val wide = fixed.setParameter("WideK", "8").setParameter("CloseRatio", "4.0")
@@ -613,10 +652,10 @@ class AnnIndexSpec extends SparkSpec {
       val (n2, in) = NearestHeadsExpr.collectBounded(h, 40)
       assert(n2 === 40L && in.map(_.length).contains(40))
     }
-    val (kept, kn) = AnnIndex.resident(spark, heavy, maxRows = 39)
-    assert((kept eq heavy) && kn === 40L)
-    val (res, rn) = AnnIndex.resident(spark, heavy, maxRows = 40)
-    assert(res.isLocal && rn === 40L)
+    val (kept, kn, noRows) = AnnIndex.resident(spark, heavy, maxRows = 39)
+    assert((kept eq heavy) && kn === 40L && noRows.isEmpty)
+    val (res, rn, rows) = AnnIndex.resident(spark, heavy, maxRows = 40)
+    assert(res.isLocal && rn === 40L && rows.map(_._1.length).contains(40))
     assert(res.collect().toSet === heavy.collect().toSet)
   }
 }

@@ -49,16 +49,27 @@ class SpannSpec extends SparkSpec {
     val widened = Seq((corpus, queries, 8, 24, 10), (hc, hq, 8, 24, 10))
     val plain = widened ++
       Seq(1, 3, 5).map(ik => (hc, hq, ik, 0, 10)) :+ ((withNaN, hq, 5, 0, 700))
-    // + (headBuckets, filtered): IndexStore-bucketed postings searched with
-    // their bucket count, and an id filter, each alone and together
-    val inputs = plain.map((_, Option.empty[Int], false)) ++
-      widened.flatMap(i => Seq((i, Some(8), false), (i, None, true), (i, Some(8), true)))
+    // the hashed corpus with a second, different vector under id 5: its rows
+    // of both vectors sit side by side once clustered by id
+    val twice = hc.union(hashed(1, "id", "vec", 9).select((col("id") + 5).as("id"), col("vec")))
+    val clustered = Seq((twice, hq, 8, 24, 10), (twice, hq, 5, 0, 700))
+    // + (headBuckets, filtered, byId): IndexStore-bucketed postings searched
+    // with their bucket count, and an id filter, each alone and together;
+    // and id-clustered postings (AnnIndex's layout) less tombstoned ids,
+    // with and without an id filter
+    val inputs = plain.map((_, Option.empty[Int], false, false)) ++
+      widened.flatMap(i =>
+        Seq((i, Some(8), false, false), (i, None, true, false), (i, Some(8), true, false))) ++
+      clustered.flatMap(i => Seq((i, None, false, true), (i, None, true, true)))
+    val dead = spark.range(0, 700, 11).toDF("id")
     val sliceLens = scala.collection.mutable.Set.empty[Long]
-    for (((corpus, queries, internalK, wideK, k), headBuckets, filtered) <- inputs;
+    for (((corpus, queries, internalK, wideK, k), headBuckets, filtered, byId) <- inputs;
          metric <- Seq("l2sq", "cos", "dot", "ip")) {
       val heads = Spann.selectHeadsModulo(corpus, 50)
       val built = Spann.buildPostings(corpus, heads, 4, metric = metric)
-      val postings = headBuckets.fold(built)(IndexStore.withBucket(built, _)).cache()
+      val postings0 = headBuckets.fold(built)(IndexStore.withBucket(built, _))
+      val postings = (if (byId) AnnIndex.byId(postings0).join(dead, Seq("id"), "left_anti")
+        else postings0).cache()
       val pass =
         if (filtered) Some(corpus.where(col("id") % 3 =!= 0).select(col("id"))) else None
       // NaN ≠ NaN: compare a NaN distance as None
@@ -90,9 +101,9 @@ class SpannSpec extends SparkSpec {
         hits.groupBy(col("query_id"))
           .agg(TopKByDistance.topkDistinct(col("id"), col("pdist"), k).as("nn")))
         .collect().map(key).toSet
-      assert(fused.nonEmpty && fused === ref,
-        s"metric $metric internalK $internalK k $k buckets $headBuckets filtered $filtered")
-      if (k > 10) assert(fused.exists(_._4.isEmpty), s"NaN row dropped, metric $metric")
+      assert(fused.nonEmpty && fused === ref, s"metric $metric internalK $internalK k $k " +
+        s"buckets $headBuckets filtered $filtered byId $byId")
+      if (corpus eq withNaN) assert(fused.exists(_._4.isEmpty), s"NaN row dropped, metric $metric")
       postings.unpersist()
     }
     assert(Seq(1L, 2L, 3L, 5L, 6L, 7L).forall(sliceLens), s"slice lengths $sliceLens")
@@ -118,9 +129,14 @@ class SpannSpec extends SparkSpec {
       .withColumn("_lut", lutUdf(col("qvec").cast("array<double>")))
       .select(col("query_id"), col("_lut"))
     val cand0 = Spann.candidateHeads(queries, heads, 8)
-    // plain, IndexStore-bucketed, id-filtered, and both
-    for (headBuckets <- Seq(None, Some(8)); idFilter <- Seq(None, Some(pass))) {
-      val coded = headBuckets.fold(coded0)(IndexStore.withBucket(coded0, _))
+    val dead = corpus.where(col("id") % 11 === 0).select(col("id"))
+    // plain, IndexStore-bucketed, id-filtered, and both; id-clustered (less
+    // tombstoned ids), with and without the filter
+    for ((headBuckets, byId) <- Seq((None, false), (Some(8), false), (None, true));
+         idFilter <- Seq(None, Some(pass))) {
+      val coded1 = headBuckets.fold(coded0)(IndexStore.withBucket(coded0, _))
+      val coded =
+        if (byId) AnnIndex.byId(coded1).join(dead, Seq("id"), "left_anti").cache() else coded1
       val fused = Spann.searchTwoStageAdc(queries, heads, coded, rcb, 10, 8,
         headBuckets = headBuckets, idFilter = idFilter)
         .collect().map(r =>
@@ -146,7 +162,47 @@ class SpannSpec extends SparkSpec {
         .collect().map(r =>
           (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
       assert(fused.nonEmpty && fused === ref,
-        s"buckets $headBuckets filtered ${idFilter.isDefined}")
+        s"buckets $headBuckets filtered ${idFilter.isDefined} byId $byId")
+    }
+  }
+
+  test("driver stage-1 ≡ candidateHeads: metrics, widening, ratio prune, ties, NaN, ragged") {
+    import graft.functions.{MultiTopK, NearestHeadsExpr}
+    def hashed(n: Long, d: Int, salt: Int) = spark.range(n).select(col("id"),
+      transform(sequence(lit(1), lit(d)),
+        j => (hash(col("id"), j, lit(salt)) % 1000 / 100.0).cast("float")).as("vec"))
+    val vecs = hashed(400, 8, 5)
+    // 20 heads, and head 1000 repeats head 0's vector: a tie on every query.
+    // One collected row order feeds both sides (a NaN query keeps the first
+    // heads the scan meets)
+    val headRows = Spann.selectHeadsModulo(vecs, 20)
+      .union(vecs.where(col("id") === 0).select(lit(1000L).as("head_id"), col("vec").as("head_vec")))
+      .collect()
+    val heads = spark.createDataFrame(java.util.Arrays.asList(headRows: _*), headRows.head.schema)
+    val (ids, hvecs) = NearestHeadsExpr.widen(headRows)
+    // queries: ten corpus rows, half of them ON a head (l2sq best 0), one
+    // with a NaN component, and two of ragged dimension (5 and 10)
+    val onGrid = vecs.where(col("id") % 10 === 0 && col("id") < 100)
+      .select(col("id").as("query_id"), col("vec").as("qvec"))
+    val nan = vecs.where(col("id") === 7).select(lit(1000L).as("query_id"),
+      transform(col("vec"), (x, j) => when(j === 2, lit(Float.NaN)).otherwise(x)).as("qvec"))
+    val ragged = Seq(hashed(1, 5, 6), hashed(1, 10, 7)).zipWithIndex.map { case (r, i) =>
+      r.select(lit(1001L + i).as("query_id"), col("vec").as("qvec")) }
+    val q = (nan +: ragged).foldLeft(onGrid)(_ union _)
+    val batch = MultiTopK.collectQueries(q)
+    // (internalK, maxDistRatio, wideK, closeRatio)
+    val configs = Seq((4, Double.MaxValue, 0, 1.0), (4, 1.5, 0, 1.0), (3, 8.0, 12, 1.3),
+      (25, 2.0, 0, 1.0), (2, Double.MaxValue, 21, 1.1))
+    for (metric <- Seq("l2sq", "ip", "cos", "dot");
+         (internalK, ratio, wideK, closeRatio) <- configs) {
+      val want = Spann.candidateHeads(q, heads, internalK, ratio, metric, wideK, closeRatio)
+        .collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("head_id"))).toSet
+      val scan = NearestHeadsExpr.kernel(ids, hvecs, math.max(internalK, wideK), metric)
+      val got = Spann.candidatePairs(batch, scan, internalK, ratio, wideK, closeRatio)
+      assert(got.length === got.distinct.length && got.toSet === want,
+        s"$metric internalK $internalK ratio $ratio wideK $wideK closeRatio $closeRatio")
+      // every query keeps its nearest head whatever the prune
+      assert(want.map(_._1).size === 13, s"$metric: a query lost every head")
     }
   }
 
