@@ -188,24 +188,17 @@ class AnnIndex private (
           conf.metric, conf.wideK, conf.closeRatio))
     }
 
-  /** A two-stage search of `queries`: the batch is collected once, within
-    * `maxRows` rows and `maxBytes` vector bytes
-    * ([[MultiTopK.collectQueriesBounded]]), and its stage-1 candidates and
-    * the collected batch go to `stage2`. An over-budget batch splits into
-    * chunks by `query_id` hash, each searched the same way (and split again
-    * if still over), and the results union.
+  /** A two-stage search of `queries`: each collected batch
+    * ([[MultiTopK.collectBatches]], within `maxRows` rows and `maxBytes`
+    * bytes) and its stage-1 candidates go to `stage2`, and the results
+    * union.
     */
   private def probe(queries: DataFrame, maxRows: Int = MultiTopK.MaxQueryRows,
-      maxBytes: Long = MultiTopK.MaxQueryBytes, salt: Int = 0)(
+      maxBytes: Long = MultiTopK.MaxQueryBytes)(
       stage2: (Array[(Long, Long)], MultiTopK.Queries) => DataFrame): DataFrame =
-    MultiTopK.collectQueriesBounded(queries, maxRows, maxBytes) match {
-      case Right(q) => stage2(candidates(queries, q), q)
-      case Left(n) =>
-        (0 until n).map { c =>
-          probe(queries.where(pmod(xxhash64(col("query_id"), lit(salt)), lit(n)) === c),
-            maxRows, maxBytes, salt + 1)(stage2)
-        }.reduce(_ unionByName _)
-    }
+    MultiTopK.collectBatches(queries, maxRows = maxRows, maxBytes = maxBytes)
+      .map { case (chunk, q) => stage2(candidates(chunk, q), q) }
+      .reduce(_ unionByName _)
 
   /** A posting frame with the tombstoned ids removed. */
   private def live(p: DataFrame): DataFrame = p.join(deleted, Seq("id"), "left_anti")
@@ -350,16 +343,17 @@ class AnnIndex private (
 
   /** Resumable iterative search over the built index (Q6 on the facade —
     * the reference's `GetIterator`, `SPANNIndex.cpp:305-316`): each
-    * `next(b)` expands the next `headBatch` stage-1 heads and pulls only
-    * their postings; deleted ids never enter the pool. `close()` releases
-    * the retained frames.
+    * `next(b)` adds the next `headBatch` stage-1 heads to the probe and
+    * reruns the stage-2 of [[search]] over the heads consumed so far (a
+    * loaded index reads only their buckets); deleted ids never surface.
     */
   def iterate(
       queries: DataFrame,
       headBatch: Int,
       maxBatches: Int = 4): graft.operators.SpannResultIterator = {
     val (h, p) = requireBuilt()
-    Spann.iterate(queries, h, live(p), headBatch, headBatch * maxBatches, conf.metric)
+    new graft.operators.SpannResultIterator(queries, h, live(p), headBatch,
+      headBatch * maxBatches, conf.metric, Some(conf.headBuckets))
   }
 
   /** Search with metadata hydration. */

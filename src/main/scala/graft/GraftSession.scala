@@ -18,8 +18,9 @@ object GraftSession {
     *    the session's artifact classloader; with per-session isolation on
     *    (the default), every fresh child session re-Janino-compiles every
     *    operator (~0.3-0.5 s per q33-sized query, CodeGenerator.compileTime,
-    *    ProfileQ33h). This engine registers no session-scoped artifacts, so
-    *    isolation buys nothing — all sessions share compiled classes. NOTE:
+    *    r15 q33 profile, OPTIMIZATION_r15.md). This engine registers no
+    *    session-scoped artifacts, so isolation buys nothing — all sessions
+    *    share compiled classes. NOTE:
     *    static conf — if a future feature registers session UDF artifacts,
     *    revisit (classes would silently share across sessions).
     *  - objectHashAggregate fallback threshold: bounded top-k aggregates run

@@ -635,7 +635,6 @@ object SparkEntry {
     "q68_spann_iter" -> ((s, d) => {
       val it = Spann.iterate(q(s, d), heads(s, d), postings(s, d),
         headBatch = InternalK, maxInternalK = InternalK * 2)
-      // materialize the union BEFORE close() releases the retained pool
       try ordered(it.next(K).unionByName(it.next(K))).localCheckpoint(true)
       finally it.close()
     }),
@@ -3017,9 +3016,6 @@ object SparkEntry {
     "q01_knn_l2", "q07_spann_postings", "q08_spann_search",
     "q20_tpch_q1", "q44_tpch_q3", "q30_text_stats",
     "q33_dedup_minhash", "q37_ann_bruteforce", "q43_events_window")
-
-  def benchQueries: Map[String, (SparkSession, String) => DataFrame] =
-    queries.view.filterKeys(benchQueryNames.contains).toMap
 
   /** TPC-H Q3-style shipping-priority join (relational anchor: broadcast dim
     * join + shuffle join + decimal-summed agg + top-k).

@@ -20,7 +20,7 @@ import org.apache.spark.sql.types._
   * single tight loop instead of `numHashes` interpreted higher-order
   * functions — the lambda-transform form boxes every element once per hash
   * function and allocates a scratch array per (row, hash), which profiled
-  * as the dominant CPU cost of the q33 signature stage (ProfileQ33f:
+  * as the dominant CPU cost of the q33 signature stage (r15 q33 profile:
   * 6.6 s CPU over 5 000 docs, ~16 M boxed longs per run). The oracle SQL
   * is unchanged — DuckDB keeps the `list_min(list_transform(...))`
   * rendering, which this expression reproduces bit-for-bit.

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.{col, count, explode, lit, size, sum}
+import org.apache.spark.sql.functions.{col, count, explode, lit, pmod, size, sum, xxhash64}
 import org.apache.spark.sql.graft.ColumnShim
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.Platform
@@ -22,9 +22,9 @@ import MultiTopK._
   * [[TopKBuffer]]s; partials merge map-side, so the exchange carries
   * O(|Q|·k·tasks) buffer rows and no (query, vector) joined row ever exists —
   * the reference's per-query result set (`SearchQuery.h`), filled by every
-  * search thread and merged at the end. Queries are collected to the driver
-  * under the "query batch is broadcastable" contract the join forms rely on
-  * ([[MultiTopK.collectQueries]]).
+  * search thread and merged at the end. Queries reach the driver through one
+  * bounded collect ([[MultiTopK.collectBatches]]): a batch over its row or
+  * byte budget is searched in `query_id`-hash chunks.
   *
   * Two axes, each dispatched once per input row:
   *  - [[MultiTopK.Scorer]]: [[MultiTopK.Exact]] vectors through
@@ -447,50 +447,62 @@ object MultiTopK {
   /** A collected query batch sorted by id: vectors widened to double (exact),
     * labels null unless asked for.
     */
-  final case class Queries(ids: Array[Long], vecs: Array[Array[Double]], labels: Array[Long])
+  final case class Queries(ids: Array[Long], vecs: Array[Array[Double]], labels: Array[Long]) {
+    def contains(qid: Long): Boolean = java.util.Arrays.binarySearch(ids, qid) >= 0
+  }
 
-  /** The driver budget of one collected `(query_id, qvec)` batch
-    * ([[collectQueriesBounded]]): rows, and bytes of widened vectors. The
-    * batch feeds both SPANN stages, so it also bounds the stage-2 candidate
-    * pairs (at most |Q|·max(internalK, wideK)) and the probe index every
-    * stage-2 task carries.
+  /** The driver budget of one collected query batch ([[collectBatches]]):
+    * rows, and bytes of ids, labels and widened vectors. A SPANN batch feeds
+    * both stages, so it also bounds the stage-2 candidate pairs (at most
+    * |Q|·max(internalK, wideK)) and the probe index every stage-2 task
+    * carries.
     */
   private[graft] val MaxQueryRows: Int = 1 << 16
   private[graft] val MaxQueryBytes: Long = 128L << 20
 
-  /** Collect a (broadcastable-by-contract) query frame `(id, vec[, label])`.
-    * A query id may appear once: a duplicate would otherwise surface as two
-    * result groups where the join forms merge one.
+  /** THE query collect of every search that carries its query batch inside
+    * the aggregate: `queries`' `(id, vec[, label])` rows as collected batches,
+    * each with the frame of its rows. A batch within `maxRows` rows and
+    * `maxBytes` bytes ([[collectQueriesBounded]]) is collected once and
+    * returned with `queries` itself; an over-budget one splits into
+    * `id`-hash chunks, each collected the same way (and split again, under a
+    * new hash salt, while still over). Callers run one search per batch and
+    * union the results. A query id may appear once.
     */
-  def collectQueries(
-      queries: DataFrame,
-      id: String = "query_id",
-      vec: String = "qvec",
-      label: Option[String] = None): Queries =
-    toQueries(queries.select((Seq(id, vec) ++ label).map(col): _*).collect(), id,
-      label.isDefined)
+  private[graft] def collectBatches(queries: DataFrame, id: String = "query_id",
+      vec: String = "qvec", label: Option[String] = None, maxRows: Int = MaxQueryRows,
+      maxBytes: Long = MaxQueryBytes, salt: Int = 0): Seq[(DataFrame, Queries)] =
+    collectQueriesBounded(queries, maxRows, maxBytes, id, vec, label) match {
+      case Right(q) => Seq((queries, q))
+      case Left(n) =>
+        (0 until n).flatMap { c =>
+          collectBatches(queries.where(pmod(xxhash64(col(id), lit(salt)), lit(n)) === c),
+            id, vec, label, maxRows, maxBytes, salt + 1)
+        }
+    }
 
-  /** [[collectQueries]] of a `(query_id, qvec)` batch within `maxRows` rows
-    * and `maxBytes` bytes of widened vectors, under the
-    * [[NearestHeadsExpr.collectBounded]] discipline: a frame whose size
-    * estimate is driver-safe is collected and checked after; an
-    * estimate-heavy one is measured first (one job for its rows and vector
-    * bytes) and collected only within budget. `Right(batch)` when it fits
-    * (a one-row batch always does: it cannot split), else `Left(n)`: the
-    * number of chunks (≥ 2) that would each fit if the split were even.
+  /** One `(id, vec[, label])` batch within `maxRows` rows and `maxBytes`
+    * bytes, under the [[NearestHeadsExpr.collectBounded]] discipline: a
+    * frame whose size estimate is driver-safe is collected and checked
+    * after; an estimate-heavy one is measured first (one job for its rows
+    * and bytes) and collected only within budget. `Right(batch)` when it
+    * fits (a one-row batch always does: it cannot split), else `Left(n)`:
+    * the number of chunks (≥ 2) that would each fit if the split were even.
     */
-  private[graft] def collectQueriesBounded(queries: DataFrame, maxRows: Int, maxBytes: Long)
+  private[graft] def collectQueriesBounded(queries: DataFrame, maxRows: Int, maxBytes: Long,
+      id: String = "query_id", vec: String = "qvec", label: Option[String] = None)
       : Either[Int, Queries] = {
-    val sel = queries.select(col("query_id"), col("qvec"))
+    val sel = queries.select((Seq(id, vec) ++ label).map(col): _*)
+    val fixed = 8L * (1 + label.size) // id and label bytes per row
     lazy val rows = sel.collect()
     val (n, bytes) =
       if (sel.queryExecution.optimizedPlan.stats.sizeInBytes <= NearestHeadsExpr.SafeCollectBytes)
-        (rows.length.toLong, rows.map(r => 8L + 8L * r.getSeq[Any](1).length).sum)
+        (rows.length.toLong, rows.map(r => fixed + 8L * r.getSeq[Any](1).length).sum)
       else {
-        val m = sel.agg(count(lit(1)), sum(lit(8L) + lit(8L) * size(col("qvec")))).head()
+        val m = sel.agg(count(lit(1)), sum(lit(fixed) + lit(8L) * size(col(vec)))).head()
         (m.getLong(0), if (m.isNullAt(1)) 0L else m.getLong(1))
       }
-    if (n <= 1 || (n <= maxRows && bytes <= maxBytes)) Right(toQueries(rows, "query_id", false))
+    if (n <= 1 || (n <= maxRows && bytes <= maxBytes)) Right(toQueries(rows, id, label.isDefined))
     else Left(math.max(2L, math.max((n - 1) / maxRows, (bytes - 1) / maxBytes) + 1).toInt)
   }
 

@@ -128,10 +128,11 @@ object PQ {
     // scan) and paid a per-row group-hash; the per-query LUTs are the SAME
     // doubles ([[Codebooks.adcLut]], the code the former per-query UDF ran),
     // scored with the same left-to-right sum — results bit-identical.
-    val q = MultiTopK.collectQueries(queries)
-    val luts = q.vecs.map(v =>
-      cb.adcLut(scala.collection.immutable.ArraySeq.unsafeWrapArray(v)))
-    lutSearch(quantized, q.ids, MultiTopK.Lut(luts), k, col("codes"))
+    MultiTopK.collectBatches(queries).map { case (_, q) =>
+      val luts = q.vecs.map(v =>
+        cb.adcLut(scala.collection.immutable.ArraySeq.unsafeWrapArray(v)))
+      lutSearch(quantized, q.ids, MultiTopK.Lut(luts), k, col("codes"))
+    }.reduce(_ unionByName _)
   }
 
   /** Every query's LUT through ONE [[MultiTopK]] scan of the quantized corpus. */
@@ -194,9 +195,10 @@ object PQ {
     // reads the very same table cells the per-pair UDF read, in the same
     // order; results bit-identical.
     val tables = sdcTables(cb)
-    val q = MultiTopK.collectQueries(quantizedQueries, vec = "codes")
-    val luts = q.vecs.map(qc => Array.tabulate(cb.m)(s => tables(s)(qc(s).toInt)))
-    lutSearch(quantized, q.ids, MultiTopK.Lut(luts), k, col("codes"))
+    MultiTopK.collectBatches(quantizedQueries, vec = "codes").map { case (_, q) =>
+      val luts = q.vecs.map(qc => Array.tabulate(cb.m)(s => tables(s)(qc(s).toInt)))
+      lutSearch(quantized, q.ids, MultiTopK.Lut(luts), k, col("codes"))
+    }.reduce(_ unionByName _)
   }
 
   /** OPQ-style rotated PQ (B13, `Common/OPQQuantizer.h:1-210`): the reference
@@ -427,24 +429,25 @@ object PQ {
     // arrays themselves (a uniform driver-side stride would read the wrong
     // cell, or out of bounds, the moment one subspace diverges)
     val c1 = rvq.cb1; val c2 = rvq.cb2
-    val qs = MultiTopK.collectQueries(queries)
-    val luts = qs.vecs.map { q =>
-      Array.tabulate(c1.m) { s =>
-        val n1 = c1.centers(s).length; val n2 = c2.centers(s).length
-        Array.tabulate(n1 * n2) { idx =>
-          val a = idx / n2; val b = idx % n2
-          var d = 0.0; var i = 0
-          while (i < c1.dsub) {
-            val rec = c1.centers(s)(a)(i) + c2.centers(s)(b)(i) / rvq.residScale
-            val x = q(s * c1.dsub + i) - rec
-            d += x * x; i += 1
+    val n2 = Array.tabulate(c2.m)(s => c2.centers(s).length)
+    MultiTopK.collectBatches(queries).map { case (_, qs) =>
+      val luts = qs.vecs.map { q =>
+        Array.tabulate(c1.m) { s =>
+          val n1 = c1.centers(s).length; val n2 = c2.centers(s).length
+          Array.tabulate(n1 * n2) { idx =>
+            val a = idx / n2; val b = idx % n2
+            var d = 0.0; var i = 0
+            while (i < c1.dsub) {
+              val rec = c1.centers(s)(a)(i) + c2.centers(s)(b)(i) / rvq.residScale
+              val x = q(s * c1.dsub + i) - rec
+              d += x * x; i += 1
+            }
+            d
           }
-          d
         }
       }
-    }
-    val n2 = Array.tabulate(c2.m)(s => c2.centers(s).length)
-    lutSearch(quantized, qs.ids, MultiTopK.Lut(luts, n2), k, col("codes1"), col("codes2"))
+      lutSearch(quantized, qs.ids, MultiTopK.Lut(luts, n2), k, col("codes1"), col("codes2"))
+    }.reduce(_ unionByName _)
   }
 
   def reconstruct(quantized: DataFrame, cb: Codebooks): DataFrame =

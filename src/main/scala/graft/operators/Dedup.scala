@@ -104,8 +104,8 @@ object Dedup {
     * `array(array_min(transform(...)), ...)` projection evaluated 16
     * interpreted lambda transforms per row — boxing every hash once per
     * function — and profiled as the q33 signature stage's dominant CPU
-    * (ProfileQ33f). Values are bit-identical; the oracle keeps its
-    * `list_min(list_transform(...))` rendering.
+    * (r15 q33 profile, OPTIMIZATION_r15.md). Values are bit-identical; the
+    * oracle keeps its `list_min(list_transform(...))` rendering.
     */
   def minhashFromArrays(da: DataFrame, numHashes: Int = 16): DataFrame =
     da.select(col("doc_id"),

@@ -32,21 +32,25 @@ object Knn {
     * distances — for callers that merge further (scatter-gather) before the
     * final rounded projection.
     *
-    * Plan: ONE scan of the corpus through [[graft.functions.MultiTopK]] (all
-    * queries ride inside the aggregate; per-query bounded buffers update
-    * map-side). The broadcast-join formulation ([[searchAggViaJoin]])
-    * materializes a joined row per (query, vector) pair first — same
-    * result, |Q|× the row traffic.
+    * Plan: ONE scan of the corpus through [[graft.functions.MultiTopK]] per
+    * collected query batch (all its queries ride inside the aggregate;
+    * per-query bounded buffers update map-side; a batch over the collect
+    * budget, `maxRows` rows / `maxBytes` bytes, runs in chunks). The
+    * broadcast-join formulation ([[searchAggViaJoin]]) materializes a joined
+    * row per (query, vector) pair first — same result, |Q|× the row traffic.
     */
   private[graft] def searchAgg(
       queries: DataFrame,
       corpus: DataFrame,
       k: Int,
-      metric: String = "l2sq"): DataFrame = {
+      metric: String = "l2sq",
+      maxRows: Int = graft.functions.MultiTopK.MaxQueryRows,
+      maxBytes: Long = graft.functions.MultiTopK.MaxQueryBytes): DataFrame = {
     import graft.functions.MultiTopK
-    val q = MultiTopK.collectQueries(queries)
-    MultiTopK.search(corpus, q.ids, MultiTopK.Exact(q.vecs, metric),
-      MultiTopK.AllQueries(k), col("id"), col("vec"))
+    MultiTopK.collectBatches(queries, maxRows = maxRows, maxBytes = maxBytes).map { case (_, q) =>
+      MultiTopK.search(corpus, q.ids, MultiTopK.Exact(q.vecs, metric),
+        MultiTopK.AllQueries(k), col("id"), col("vec"))
+    }.reduce(_ unionByName _)
   }
 
   /** Join-formulated [[searchAgg]] — kept as the reference dataflow (tested

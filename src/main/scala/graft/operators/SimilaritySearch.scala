@@ -251,15 +251,16 @@ object SimilaritySearch {
   }
 
   /** Every vector of `(id, vec, label)` as an anchor, through ONE
-    * label-aware [[graft.functions.MultiTopK]] scan of the same vectors →
-    * `(query_id, pos, neg)`.
+    * label-aware [[graft.functions.MultiTopK]] scan of the same vectors per
+    * collected anchor batch → `(query_id, pos, neg)`.
     */
   private def labeledSearch(vectors: DataFrame, kPos: Int, kNeg: Int,
       metric: String): DataFrame = {
     import graft.functions.MultiTopK
-    val q = MultiTopK.collectQueries(vectors, "id", "vec", Some("label"))
-    MultiTopK.search(vectors, q.ids, MultiTopK.Exact(q.vecs, metric),
-      MultiTopK.Labeled(kPos, kNeg, q.ids, q.labels), col("id"), col("vec"), col("label"))
+    MultiTopK.collectBatches(vectors, "id", "vec", Some("label")).map { case (_, q) =>
+      MultiTopK.search(vectors, q.ids, MultiTopK.Exact(q.vecs, metric),
+        MultiTopK.Labeled(kPos, kNeg, q.ids, q.labels), col("id"), col("vec"), col("label"))
+    }.reduce(_ unionByName _)
   }
 
   /** Triplet mining for contrastive training: for every anchor, its nearest

@@ -709,8 +709,23 @@ object Spann {
       metric: String = "l2sq",
       headBuckets: Option[Int] = None,
       idFilter: Option[DataFrame] = None): DataFrame =
-    searchPairs(collectPairs(cand), MultiTopK.collectQueries(queries), postings, k, metric,
-      headBuckets, idFilter)
+    perBatch(collectPairs(cand), queries)(
+      searchPairs(_, _, postings, k, metric, headBuckets, idFilter))
+
+  /** `run` over each collected batch of `queries`
+    * ([[MultiTopK.collectBatches]]) with the stage-1 `pairs` of its queries,
+    * the results unioned. One batch takes every pair; past one, a pair whose
+    * query no batch holds goes with the first, whose [[MultiTopK.Probe]]
+    * router names it.
+    */
+  private def perBatch(pairs: Array[(Long, Long)], queries: DataFrame)(
+      run: (Array[(Long, Long)], MultiTopK.Queries) => DataFrame): DataFrame =
+    MultiTopK.collectBatches(queries).map(_._2) match {
+      case Seq(q) => run(pairs, q)
+      case qs =>
+        val of = pairs.groupBy(p => math.max(0, qs.indexWhere(_.contains(p._1))))
+        qs.indices.map(i => run(of.getOrElse(i, Array.empty), qs(i))).reduce(_ unionByName _)
+    }
 
   /** [[searchFromCandidates]] from collected candidates and queries. */
   private[graft] def searchPairs(
@@ -724,23 +739,11 @@ object Spann {
     stage2(pairs, q, postings, MultiTopK.Exact(q.vecs, metric), col("vec"), k,
       headBuckets, idFilter)
 
-  /** [[searchFromCandidates]] in the COMPRESSED domain: each probed posting
-    * entry (`codedPostings` = `(head_id, id, codes[, head_bucket])`) is
-    * scored from its stored `codes` through the query's ADC table, built by
+  /** [[searchPairs]] in the COMPRESSED domain: each probed posting entry
+    * (`codedPostings` = `(head_id, id, codes[, head_bucket])`) is scored
+    * from its stored `codes` through the query's ADC table, built by
     * [[graft.functions.PQ.Codebooks.adcLut]] over the rotated query.
     */
-  private[graft] def adcFromCandidates(
-      cand: DataFrame,
-      queries: DataFrame,
-      codedPostings: DataFrame,
-      rcb: graft.functions.PQ.RotatedCodebooks,
-      k: Int,
-      headBuckets: Option[Int] = None,
-      idFilter: Option[DataFrame] = None): DataFrame =
-    adcPairs(collectPairs(cand), MultiTopK.collectQueries(queries), codedPostings, rcb, k,
-      headBuckets, idFilter)
-
-  /** [[adcFromCandidates]] from collected candidates and queries. */
   private[graft] def adcPairs(
       pairs: Array[(Long, Long)],
       q: MultiTopK.Queries,
@@ -827,26 +830,8 @@ object Spann {
       metric: String = "l2sq",
       headBuckets: Option[Int] = None,
       idFilter: Option[DataFrame] = None): DataFrame =
-    adcFromCandidates(candidateHeads(queries, heads, internalK, maxDistRatio, metric),
-      queries, codedPostings, rcb, k, headBuckets, idFilter)
-
-  /** [[searchTwoStageHier]] with the compressed stage-2 — the routed stage-0/1
-    * feeding ADC scoring over stored codes.
-    */
-  def searchTwoStageHierAdc(
-      queries: DataFrame,
-      superHeads: DataFrame,
-      routing: DataFrame,
-      codedPostings: DataFrame,
-      rcb: graft.functions.PQ.RotatedCodebooks,
-      k: Int,
-      internalK: Int,
-      superK: Int,
-      metric: String = "l2sq",
-      idFilter: Option[DataFrame] = None): DataFrame =
-    adcFromCandidates(
-      candidateHeadsHier(queries, superHeads, routing, internalK, superK, metric),
-      queries, codedPostings, rcb, k, idFilter = idFilter)
+    perBatch(collectPairs(candidateHeads(queries, heads, internalK, maxDistRatio, metric)),
+      queries)(adcPairs(_, _, codedPostings, rcb, k, headBuckets, idFilter))
 
   /** Route each head to its `routeReplicas` nearest super-heads — the
     * broadcast-free routing table for [[searchTwoStageHier]]. Output
@@ -947,14 +932,13 @@ object Spann {
   /** Resumable two-stage iterator (Q6 over SPANN —
     * `SPANNResultIterator.h:1-88`, `SPANNIndex.cpp:261-302`
     * SearchIndexIterative): the stage-1 head ranking is computed ONCE to the
-    * full iteration budget (`maxInternalK`) and retained; each `next(b)`
-    * consumes the next `headBatch` heads off that frame, pulls ONLY their
-    * postings (the reference's incremental posting loads), merges them into
-    * the retained scored pool, and serves the best `b` not-yet-emitted ids
-    * per query. Batches past the first head batch carry
-    * `relaxed_mono = true` — the reference's continuation flag for results
-    * served beyond the initial posting budget without the strict global-order
-    * guarantee.
+    * full iteration budget (`maxInternalK`) and collected; each `next(b)`
+    * widens the probe by the next `headBatch` heads and reruns the one
+    * stage-2 over every head consumed so far (the reference's plain search
+    * re-run with more heads), serving the best `b` not-yet-emitted ids per
+    * query. Batches past the first head batch carry `relaxed_mono = true` —
+    * the reference's continuation flag for results served beyond the
+    * initial posting budget without the strict global-order guarantee.
     */
   def iterate(
       queries: DataFrame,
@@ -1060,66 +1044,62 @@ object Spann {
 }
 
 /** Handle for [[Spann.iterate]] — the two-stage analogue of
-  * [[graft.operators.ResultIterator]]: state is the cached stage-1 head
-  * ranking (the reference's retained head-query workspace), the scored
-  * posting pool accumulated so far, and the set of already-emitted
-  * `(query_id, id)` pairs. Successive batches are disjoint per query;
-  * `close()` releases every retained frame (`SPANNResultIterator::Close`).
+  * [[graft.operators.ResultIterator]]. State: the collected query batches
+  * ([[MultiTopK.collectBatches]]), the collected stage-1 ranking
+  * `(query_id, head_id, rank)` to `maxInternalK`, the consumed head count,
+  * and the ids already emitted per query. `next(b)` runs the one stage-2
+  * ([[Spann.searchPairs]]) over the pairs ranked within the consumed heads
+  * with `k = b + E`, E the most ids emitted for any query of the batch,
+  * then drops the emitted ids and keeps the first `b`: an emitted id
+  * outranks at most E of the best `b` unemitted ones, so those are all
+  * inside the top `b + E`, each at its smallest distance over the probed
+  * postings. Successive batches are disjoint per query; `headBuckets` (a
+  * loaded index's bucket count) lets stage-2 read only the consumed heads'
+  * buckets. Nothing is cached, so `close()` (`SPANNResultIterator::Close`)
+  * has nothing to release.
   */
-final class SpannResultIterator private[operators] (
+final class SpannResultIterator private[graft] (
     queries: DataFrame,
     heads: DataFrame,
     postings: DataFrame,
     headBatch: Int,
     maxInternalK: Int,
-    metric: String) {
-  import org.apache.spark.sql.functions._
-
-  private val stage1 =
-    Spann.candidateHeads(queries, heads, maxInternalK, metric = metric).cache()
+    metric: String,
+    headBuckets: Option[Int] = None,
+    maxRows: Int = MultiTopK.MaxQueryRows,
+    maxBytes: Long = MultiTopK.MaxQueryBytes) {
+  // each collected batch with its queries' stage-1 (query_id, head_id, rank)
+  private val work = {
+    val ranked = Spann.candidateHeads(queries, heads, maxInternalK, metric = metric)
+      .select(col("query_id").cast("long"), col("head_id").cast("long"), col("rank"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
+    MultiTopK.collectBatches(queries, maxRows = maxRows, maxBytes = maxBytes)
+      .map { case (_, q) => (q, ranked.filter(p => q.contains(p._1))) }
+  }
   private var consumed = 0
-  private var pool: Option[DataFrame] = None
-  private var emitted: Option[DataFrame] = None
-  private val retained = scala.collection.mutable.Buffer.empty[DataFrame]
+  private val emitted = scala.collection.mutable.HashMap.empty[Long, Set[Long]]
 
   def hasNext: Boolean = consumed < maxInternalK
 
   def next(b: Int): DataFrame = {
-    // the next head batch off the retained stage-1 frame (no recompute)
-    val newCand = stage1
-      .where(col("rank") > consumed && col("rank") <= consumed + headBatch)
+    require(b > 0, s"next requires b > 0, got $b")
     val relaxed = consumed >= headBatch // past the first posting budget
     consumed = math.min(consumed + headBatch, maxInternalK)
-    // pull ONLY the new heads' postings, score, fold into the pool
-    val newHits = newCand.select(col("query_id"), col("head_id"))
-      .join(postings, Seq("head_id"))
-      .join(broadcast(queries), Seq("query_id"))
-      .withColumn("pdist", dist.byName(metric)(col("qvec"), col("vec")))
-      .select(col("query_id"), col("id"), col("pdist"))
-    val merged = pool.map(_.unionByName(newHits)).getOrElse(newHits).cache()
-    retained += merged
-    pool = Some(merged)
-    // serve the best b per query among ids not emitted by earlier batches
-    // (replica duplicates collapse inside the bounded distinct-id top-k)
-    val avail = emitted.map(e => merged.join(e, Seq("query_id", "id"), "left_anti"))
-      .getOrElse(merged)
-    val out = Knn.explodeRanked(
-      avail.groupBy(col("query_id"))
-        .agg(graft.functions.TopKByDistance.topkDistinct(col("id"), col("pdist"), b).as("nn")))
-      .withColumn("relaxed_mono", lit(relaxed))
-      .cache()
-    retained += out
-    emitted = Some(emitted match {
-      case Some(e) => e.unionByName(out.select(col("query_id"), col("id")))
-      case None => out.select(col("query_id"), col("id"))
-    })
-    out
+    val rows = work.flatMap { case (q, ranked) =>
+      val pairs = ranked.collect { case (qid, hid, rank) if rank <= consumed => (qid, hid) }
+      val e = q.ids.iterator.map(emitted.get(_).fold(0)(_.size)).maxOption.getOrElse(0)
+      Spann.searchPairs(pairs, q, postings, b + e, metric, headBuckets, None).collect()
+    }.groupBy(_.getLong(0)).toSeq.sortBy(_._1).flatMap { case (qid, hits) =>
+      val seen = emitted.getOrElse(qid, Set.empty[Long])
+      val fresh = hits.sortBy(_.getInt(1)).map(h => (h.getLong(2), h.getDouble(3)))
+        .filterNot(h => seen(h._1)).take(b)
+      emitted(qid) = seen ++ fresh.map(_._1)
+      fresh.zipWithIndex.map { case ((id, d), i) => (qid, i + 1, id, d, relaxed) }
+    }
+    import queries.sparkSession.implicits._
+    rows.toDF("query_id", "rank", "id", "dist", "relaxed_mono")
   }
 
-  /** Release the retained workspace (reference `SPANNResultIterator::Close`). */
-  def close(): Unit = {
-    stage1.unpersist()
-    retained.foreach(_.unpersist())
-    retained.clear()
-  }
+  /** Releases nothing: the iterator holds no cached frame. */
+  def close(): Unit = ()
 }

@@ -96,14 +96,7 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val dst = args.lift(1).getOrElse("/tmp/graft_scale10")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4194304")
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.GraftExtensions)
-      .getOrCreate()
+    val spark = graft.GraftSession.build() // $SPARK_GRAFT_CPUS cores, default 32
     spark.sparkContext.setLogLevel("ERROR")
 
     val shuffleWrite = new java.util.concurrent.atomic.AtomicLong(0)

@@ -79,6 +79,19 @@ class AnnIndexSpec extends SparkSpec {
     assert(loaded.getParameter("metric") === "l2sq")
   }
 
+  test("a loaded index's iterator serves the built index's batches") {
+    val dir = Files.createTempDirectory("graft_annidx_iter").toString
+    val idx = freshIndex.build().deleteByIds(Seq(2L, 9L).toDF("id"))
+    idx.save(s"$dir/idx")
+    val loaded = AnnIndex.load(spark, s"$dir/idx")
+    def draws(i: AnnIndex) = {
+      val it = i.iterate(synthQueries(3), headBatch = 4, maxBatches = 2)
+      try Seq(5, 5, 5).map(it.next(_).collect().toSet) finally it.close()
+    }
+    val want = draws(idx)
+    assert(want.forall(_.size == 15) && draws(loaded) === want)
+  }
+
   test("quantizer: train → ADC search → survives save/load (Q11/S6)") {
     val dir = Files.createTempDirectory("graft_annidx_pq").toString
     val idx = freshIndex.build().trainQuantizer(m = 2, k = 8, maxIter = 2)

@@ -47,6 +47,54 @@ class KnnSpec extends SparkSpec {
     assert(err.getMessage.contains("duplicate query_id 0"), err.getMessage)
   }
 
+  private def hashed(n: Int, d: Int, idCol: String, vecCol: String, salt: Int) =
+    spark.range(n).select(col("id").as(idCol),
+      transform(sequence(lit(1), lit(d)),
+        j => (hash(col("id"), j, lit(salt)) % 1000 / 100.0).cast("float")).as(vecCol))
+
+  test("collectBatches: over-budget batches split into query_id-hash chunks that " +
+    "partition the ids, each within budget") {
+    import graft.functions.MultiTopK
+    val h = hashed(23, 8, "query_id", "qvec", 1)
+    val q = spark.createDataFrame(java.util.Arrays.asList(h.collect(): _*), h.schema)
+    val heavy = spark.createDataFrame(h.rdd, h.schema) // no size estimate: measured first
+    val all = (0L until 23L).toSeq
+    // one row costs 8 id bytes + 8 · 8 widened vector bytes
+    val one = MultiTopK.collectBatches(q)
+    assert(one.size === 1 && (one.head._1 eq q) && one.head._2.ids.toSeq === all)
+    for ((f, rows, bytes) <- Seq((heavy, 5, Long.MaxValue), (q, 5, Long.MaxValue),
+        (q, Int.MaxValue, 4 * 72L), (q, 3, 2 * 72L), (q, 1, Long.MaxValue))) {
+      val chunks = MultiTopK.collectBatches(f, maxRows = rows, maxBytes = bytes)
+      assert(chunks.size > 1, s"rows $rows bytes $bytes")
+      assert(chunks.flatMap(_._2.ids).sorted === all, s"rows $rows bytes $bytes")
+      for ((frame, b) <- chunks) {
+        assert(b.ids.length <= rows && b.vecs.map(8L + 8L * _.length).sum <= bytes)
+        assert(frame.select("query_id").collect().map(_.getLong(0)).sorted.toSeq ===
+          b.ids.toSeq, "a chunk frame holds other queries than its batch")
+      }
+    }
+    // labeled batches carry each id's label, 16 + 64 bytes a row
+    val hv = hashed(23, 8, "id", "vec", 3).withColumn("label", col("id") % 3)
+    val v = spark.createDataFrame(java.util.Arrays.asList(hv.collect(): _*), hv.schema)
+    val labeled = MultiTopK.collectBatches(v, "id", "vec", Some("label"), 4, 3 * 80L)
+    assert(labeled.size > 1 && labeled.flatMap(_._2.ids).sorted === all)
+    for ((_, b) <- labeled) {
+      assert(b.ids.length <= 3)
+      assert(b.ids.indices.forall(i => b.labels(i) === b.ids(i) % 3))
+    }
+  }
+
+  test("Knn.search over a query batch split by a tiny budget equals one batch") {
+    val q = hashed(9, 16, "query_id", "qvec", 4)
+    val corpus = hashed(300, 16, "id", "vec", 5)
+    for (metric <- Seq("l2sq", "cos")) {
+      val one = Knn.search(q, corpus, 5, metric).collect().toSet
+      val split = Knn.explodeRanked(Knn.searchAgg(q, corpus, 5, metric, 2, Long.MaxValue))
+        .collect().toSet
+      assert(one.size === 45 && split === one, metric)
+    }
+  }
+
   test("filtered search never returns excluded meta (FilterTest.cpp:52-56)") {
     val res = Knn.searchFiltered(
       synthQueries(), synthVectors(), col("meta") =!= "2", 3)

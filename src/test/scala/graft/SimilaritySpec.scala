@@ -144,7 +144,7 @@ class SimilaritySpec extends SparkSpec {
     def nn(r: org.apache.spark.sql.Row, i: Int) =
       r.getSeq[org.apache.spark.sql.Row](i).map(x => (x.getLong(0), x.getDouble(1)))
     for (metric <- Seq("l2sq", "cos", "dot", "ip")) {
-      val q = MultiTopK.collectQueries(v, "id", "vec", Some("label"))
+      val Seq((_, q)) = MultiTopK.collectBatches(v, "id", "vec", Some("label"))
       val got = MultiTopK.search(v, q.ids, MultiTopK.Exact(q.vecs, metric),
         MultiTopK.Labeled(3, 2, q.ids, q.labels), col("id"), col("vec"), col("label"))
         .collect().map(r => r.getLong(0) -> (nn(r, 1), nn(r, 2))).toMap

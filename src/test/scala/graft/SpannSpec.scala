@@ -189,7 +189,7 @@ class SpannSpec extends SparkSpec {
     val ragged = Seq(hashed(1, 5, 6), hashed(1, 10, 7)).zipWithIndex.map { case (r, i) =>
       r.select(lit(1001L + i).as("query_id"), col("vec").as("qvec")) }
     val q = (nan +: ragged).foldLeft(onGrid)(_ union _)
-    val batch = MultiTopK.collectQueries(q)
+    val Seq((_, batch)) = MultiTopK.collectBatches(q)
     // (internalK, maxDistRatio, wideK, closeRatio)
     val configs = Seq((4, Double.MaxValue, 0, 1.0), (4, 1.5, 0, 1.0), (3, 8.0, 12, 1.3),
       (25, 2.0, 0, 1.0), (2, Double.MaxValue, 21, 1.1))
@@ -362,6 +362,64 @@ class SpannSpec extends SparkSpec {
         .except(union.select("query_id", "id")).isEmpty)
       assert(!it.hasNext)
     } finally it.close()
+  }
+
+  /** A hashed 16-d corpus plus a second, far vector under id 5; its heads,
+    * `metric` postings less every 13th id, and 5 queries.
+    */
+  private def iterFixture(metric: String) = {
+    def hashed(n: Int, idCol: String, vecCol: String, salt: Int) =
+      spark.range(n).select(col("id").as(idCol),
+        transform(sequence(lit(1), lit(16)),
+          j => (hash(col("id"), j, lit(salt)) % 1000 / 100.0).cast("float")).as(vecCol))
+    val c = hashed(500, "id", "vec", 2)
+      .union(hashed(1, "id", "vec", 9).select((col("id") + 5).as("id"), col("vec")))
+    val heads = Spann.selectHeadsModulo(c, 25)
+    val postings = Spann.buildPostings(c, heads, 3, metric = metric)
+      .join(spark.range(0, 500, 13).toDF("id"), Seq("id"), "left_anti").cache()
+    (heads, postings, hashed(5, "query_id", "qvec", 1))
+  }
+
+  private type Iter = {
+    def hasNext: Boolean
+    def next(b: Int): org.apache.spark.sql.DataFrame
+    def close(): Unit
+  }
+
+  private def drain(it: Iter, bs: Seq[Int]) = {
+    import scala.language.reflectiveCalls
+    try bs.map(b => (it.hasNext, it.next(b).collect().map(r =>
+      (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3), r.getBoolean(4))).sorted.toSeq))
+    finally it.close()
+  }
+
+  test("SPANN iterator on the one stage-2 ≡ its former posting-join form, row for row") {
+    // (metric, headBatch, maxInternalK, b per call): every b sequence runs
+    // one call past hasNext turning false
+    val configs = Seq(("l2sq", 1, 3, Seq(4, 2, 5, 3)), ("ip", 3, 7, Seq(3, 6, 2, 4)),
+      ("cos", 8, 12, Seq(5, 9, 4)), ("dot", 1, 3, Seq(2, 7, 1, 6)),
+      ("l2sq", 3, 7, Seq(6, 1, 8, 5)), ("l2sq", 8, 12, Seq(10, 3, 6)))
+    for ((metric, headBatch, maxK, bs) <- configs) {
+      val (heads, postings, q) = iterFixture(metric)
+      val got = drain(Spann.iterate(q, heads, postings, headBatch, maxK, metric), bs)
+      val want = drain(new FormerSpannIterator(q, heads, postings, headBatch, maxK, metric), bs)
+      val tag = s"$metric headBatch $headBatch maxInternalK $maxK"
+      assert(got.map(_._2).forall(_.nonEmpty) && !got.last._1, tag)
+      assert(got === want, tag)
+      // id 5's two vectors both meet the probe: it is served once per query
+      assert(got.flatMap(_._2).groupBy(r => (r._1, r._3)).forall(_._2.size == 1), tag)
+      postings.unpersist()
+    }
+  }
+
+  test("SPANN iterator over a query batch split by a tiny budget ≡ one batch") {
+    val (heads, postings, q) = iterFixture("l2sq")
+    val bs = Seq(4, 6, 3)
+    val one = drain(Spann.iterate(q, heads, postings, 3, 7), bs)
+    val split = drain(new graft.operators.SpannResultIterator(q, heads, postings, 3, 7, "l2sq",
+      maxRows = 2, maxBytes = Long.MaxValue), bs)
+    assert(one.map(_._2.size) === Seq(20, 30, 15) && split === one)
+    postings.unpersist()
   }
 
   test("hierarchical routing with full fan equals flat candidate heads (Q5 hier)") {
@@ -754,5 +812,69 @@ class SpannSpec extends SparkSpec {
       val headIds = h2.select("head_id").collect().map(_.getLong(0)).toSet
       assert(lens.map(_.getLong(0)).forall(headIds), s"trial $trial dangling head")
     }
+  }
+}
+
+/** `SpannResultIterator` as it stood with its own stage-2 (a posting join
+  * into a growing cached pool, emitted ids anti-joined out), its `next` body
+  * kept verbatim as the reference the one-stage-2 form is pinned against.
+  */
+private final class FormerSpannIterator(
+    queries: org.apache.spark.sql.DataFrame,
+    heads: org.apache.spark.sql.DataFrame,
+    postings: org.apache.spark.sql.DataFrame,
+    headBatch: Int,
+    maxInternalK: Int,
+    metric: String) {
+  import org.apache.spark.sql.DataFrame
+  import org.apache.spark.sql.functions._
+  import graft.functions.dist
+  import graft.operators.{Knn, Spann}
+
+  private val stage1 =
+    Spann.candidateHeads(queries, heads, maxInternalK, metric = metric).cache()
+  private var consumed = 0
+  private var pool: Option[DataFrame] = None
+  private var emitted: Option[DataFrame] = None
+  private val retained = scala.collection.mutable.Buffer.empty[DataFrame]
+
+  def hasNext: Boolean = consumed < maxInternalK
+
+  def next(b: Int): DataFrame = {
+    // the next head batch off the retained stage-1 frame (no recompute)
+    val newCand = stage1
+      .where(col("rank") > consumed && col("rank") <= consumed + headBatch)
+    val relaxed = consumed >= headBatch // past the first posting budget
+    consumed = math.min(consumed + headBatch, maxInternalK)
+    // pull ONLY the new heads' postings, score, fold into the pool
+    val newHits = newCand.select(col("query_id"), col("head_id"))
+      .join(postings, Seq("head_id"))
+      .join(broadcast(queries), Seq("query_id"))
+      .withColumn("pdist", dist.byName(metric)(col("qvec"), col("vec")))
+      .select(col("query_id"), col("id"), col("pdist"))
+    val merged = pool.map(_.unionByName(newHits)).getOrElse(newHits).cache()
+    retained += merged
+    pool = Some(merged)
+    // serve the best b per query among ids not emitted by earlier batches
+    // (replica duplicates collapse inside the bounded distinct-id top-k)
+    val avail = emitted.map(e => merged.join(e, Seq("query_id", "id"), "left_anti"))
+      .getOrElse(merged)
+    val out = Knn.explodeRanked(
+      avail.groupBy(col("query_id"))
+        .agg(graft.functions.TopKByDistance.topkDistinct(col("id"), col("pdist"), b).as("nn")))
+      .withColumn("relaxed_mono", lit(relaxed))
+      .cache()
+    retained += out
+    emitted = Some(emitted match {
+      case Some(e) => e.unionByName(out.select(col("query_id"), col("id")))
+      case None => out.select(col("query_id"), col("id"))
+    })
+    out
+  }
+
+  def close(): Unit = {
+    stage1.unpersist()
+    retained.foreach(_.unpersist())
+    retained.clear()
   }
 }
